@@ -618,11 +618,10 @@ def entry(spark: SparkSession) -> DataFrame:
     ``documents`` table (each document = a one-turn conversation)."""
     from documentai_spark.functions.verdict import with_verdict
     from documentai_spark.operators.extraction import (
-        with_extraction, with_quality,
+        with_extraction_and_quality,
     )
     docs = _t(spark, SF0001, "documents")
-    df = with_extraction(docs, text_col="text")
-    df = with_quality(df, raw_col="text")
+    df = with_extraction_and_quality(docs, text_col="text")
     df = with_verdict(df)
     return df.select("doc_id", "kind", "extracted_text", "q_blank",
                      "q_legibility", "q_completeness", "q_skew", "q_noise",
@@ -1860,10 +1859,10 @@ def q_extract_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship extraction+quality pipeline over documents."""
     from documentai_spark.functions.verdict import with_verdict
     from documentai_spark.operators.extraction import (
-        with_extraction, with_quality,
+        with_extraction_and_quality,
     )
     docs = _par(spark, _t(spark, sf_dir, "documents"))
-    df = with_quality(with_extraction(docs), raw_col="text")
+    df = with_extraction_and_quality(docs)
     df = with_verdict(df)
     return df.select("doc_id", "kind", "q_blank", "q_legibility",
                      "q_completeness", "q_skew", "q_noise", "q_contrast",

@@ -83,7 +83,7 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
     """Adds keep / is_dup / bad_lang / bad_len / low_conf.
 
     ``df`` must already carry the quality ``confidence`` column (run
-    with_extraction + with_quality + with_verdict upstream — the bench
+    with_extraction_and_quality + with_verdict upstream — the bench
     and gate shapes do).
 
     ``near_dedup=True`` (VERDICT r5 #5) additionally runs the full

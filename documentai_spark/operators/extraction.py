@@ -80,61 +80,6 @@ FUSED_RESULT_TYPE = StructType(
     EXTRACT_RESULT_TYPE.fields + QUALITY_RESULT_TYPE.fields)
 
 
-@pandas_udf(EXTRACT_RESULT_TYPE)
-def extract_udf(text: pd.Series) -> pd.DataFrame:
-    """text -> (kind, extracted_text, spans); one call per Arrow batch."""
-    kinds: list[str] = []
-    texts: list[str] = []
-    spans_col: list[list] = []
-    for t in text:
-        kind, extracted, spans = extract_turn(t)
-        kinds.append(kind)
-        texts.append(extracted)
-        spans_col.append(spans)  # NamedTuples -> structs, no dict boxing
-    return pd.DataFrame({"kind": kinds, "extracted_text": texts,
-                         "spans": spans_col})
-
-
-@pandas_udf(QUALITY_RESULT_TYPE)
-def quality_udf(raw: pd.Series, extracted: pd.Series) -> pd.DataFrame:
-    """(raw text, extracted text) -> ten quality metrics (the text
-    analogs of the reference's 10-metric image ensemble; SURVEY App. A).
-
-    Fully vectorized (operators/quality_vec mirrors core/quality
-    bit-for-bit; equality pinned by tests). Confidence + verdict +
-    recommendations are pure SQL on top (functions/verdict) — the
-    reference's verdict machinery is scalar thresholds
-    (quality_config.py:86-129), no UDF needed.
-    """
-    from documentai_spark.operators.quality_vec import (
-        _Counts, blank_scores, brightness_scores, completeness_scores,
-        contrast_scores, edge_crop_scores, legibility_scores, noise_scores,
-        resolution_scores, shadow_glare_scores, skew_scores,
-    )
-    ext_f = extracted.fillna("")
-    raw_f = raw.fillna("")
-    c = _Counts(ext_f.tolist())
-    # identity-extraction rows (plain turns, incl. the CPU-dominant mega
-    # turns) share the count pass: blank consumes raw-side counts that are
-    # value-equal to the extracted-side ones just computed (memcmp is
-    # ~100x cheaper than recounting; r7 review — this path used to run
-    # the full _Counts machinery twice per batch)
-    same = (raw_f.to_numpy(dtype=object) == ext_f.to_numpy(dtype=object))
-    c_raw = _Counts(raw_f.tolist(), reuse=(c, same))
-    return pd.DataFrame({
-        "q_blank": blank_scores(raw, counts=c_raw),
-        "q_legibility": legibility_scores(extracted, counts=c),
-        "q_completeness": completeness_scores(extracted, counts=c),
-        "q_skew": skew_scores(extracted, counts=c),
-        "q_noise": noise_scores(extracted, counts=c),
-        "q_contrast": contrast_scores(extracted, counts=c),
-        "q_brightness": brightness_scores(extracted, counts=c),
-        "q_edge_crop": edge_crop_scores(extracted, counts=c),
-        "q_shadow_glare": shadow_glare_scores(extracted, counts=c),
-        "q_resolution": resolution_scores(extracted, counts=c),
-    })
-
-
 @pandas_udf(ENTITY_RESULT_TYPE)
 def entity_udf(extracted: pd.Series) -> pd.DataFrame:
     """extracted text -> (flat entity map, char-offset entity spans,
@@ -193,8 +138,6 @@ def extract_quality_udf(text: pd.Series) -> pd.DataFrame:
 # Marking the expensive extraction-family UDFs non-deterministic
 # forbids the optimizer from duplicating them; the functions are pure,
 # so results are unchanged (the flag only constrains plan rewrites).
-extract_udf = extract_udf.asNondeterministic()
-quality_udf = quality_udf.asNondeterministic()
 entity_udf = entity_udf.asNondeterministic()
 extract_quality_udf = extract_quality_udf.asNondeterministic()
 
@@ -206,25 +149,6 @@ def with_extraction_and_quality(df: DataFrame,
     for f in FUSED_RESULT_TYPE.fieldNames():
         out = out.withColumn(f, F.col(f"_xq.{f}"))
     return out.drop("_xq")
-
-
-def with_extraction(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add kind / extracted_text / spans columns (no shuffle)."""
-    return (df.withColumn("_x", extract_udf(F.col(text_col)))
-              .withColumn("kind", F.col("_x.kind"))
-              .withColumn("extracted_text", F.col("_x.extracted_text"))
-              .withColumn("spans", F.col("_x.spans"))
-              .drop("_x"))
-
-
-def with_quality(df: DataFrame, raw_col: str = "text",
-                 extracted_col: str = "extracted_text") -> DataFrame:
-    """Add the TEN q_* metric columns (no shuffle; the r3 ten-metric ensemble — see core/quality)."""
-    out = df.withColumn("_q", quality_udf(F.col(raw_col),
-                                          F.col(extracted_col)))
-    for f in QUALITY_RESULT_TYPE.fieldNames():
-        out = out.withColumn(f, F.col(f"_q.{f}"))
-    return out.drop("_q")
 
 
 def with_entities(df: DataFrame,

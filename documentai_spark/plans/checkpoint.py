@@ -46,30 +46,34 @@ def _manifest_path(out_path: str, bucket: int) -> str:
     return os.path.join(out_path, MANIFEST_DIR, f"bucket-{bucket:05d}.json")
 
 
+def _read_record(path: str) -> dict | None:
+    """The ONE corrupt-tolerant manifest read, shared by bucket and stage
+    manifests. A missing, truncated or corrupt file (crash between rename
+    and data-block flush on a non-fsync filesystem, pre-r7 files) reads
+    as None — NOT done: buckets and stages are idempotently re-runnable
+    by design, so the recovery for a bad manifest is simply to redo that
+    work, never to brick resume. Valid JSON that is not a record (a list,
+    hand-edited or foreign files) reads as None too."""
+    try:
+        with open(path) as f:
+            rec = json.load(f)
+    except (json.JSONDecodeError, OSError):
+        return None
+    return rec if isinstance(rec, dict) else None
+
+
 def read_manifest(out_path: str) -> dict[int, dict]:
-    """All committed bucket manifests (driver-side). A truncated or
-    corrupt manifest (crash between rename and data-block flush on a
-    non-fsync filesystem, pre-r7 files) reads as NOT done — the bucket
-    is idempotently re-runnable by design, so the recovery for a bad
-    manifest is simply to redo that bucket, never to brick resume."""
+    """All committed bucket manifests (driver-side); unreadable ones and
+    records without an int ``partition`` read as not done."""
     d = os.path.join(out_path, MANIFEST_DIR)
     out: dict[int, dict] = {}
     if not os.path.isdir(d):
         return out
     for fn in os.listdir(d):
         if fn.startswith("bucket-") and fn.endswith(".json"):
-            try:
-                with open(os.path.join(d, fn)) as f:
-                    rec = json.load(f)
-            except (json.JSONDecodeError, OSError):
-                continue
-            # valid JSON that is not a bucket record (hand-edited or
-            # foreign tool) must ALSO read as not-done, not KeyError —
-            # per the contract above, never brick resume on a bad file
-            if not isinstance(rec, dict) or \
-                    not isinstance(rec.get("partition"), int):
-                continue
-            out[rec["partition"]] = rec
+            rec = _read_record(os.path.join(d, fn))
+            if rec is not None and isinstance(rec.get("partition"), int):
+                out[rec["partition"]] = rec
     return out
 
 
@@ -89,34 +93,14 @@ def _atomic_write_json(path: str, rec: dict) -> None:
     os.replace(tmp, path)
 
 
-def _commit_manifest(out_path: str, rec: dict) -> None:
-    _atomic_write_json(_manifest_path(out_path, rec["partition"]), rec)
-
-
 def _stage_manifest_path(out_path: str, name: str) -> str:
     return os.path.join(out_path, MANIFEST_DIR, f"stage-{name}.json")
 
 
 def read_stage_manifest(out_path: str, name: str) -> dict | None:
-    """A named (non-bucket) stage's committed manifest, or None. Corrupt
-    manifests read as None (stage pending) — see read_manifest."""
-    path = _stage_manifest_path(out_path, name)
-    if not os.path.isfile(path):
-        return None
-    try:
-        with open(path) as f:
-            rec = json.load(f)
-    except (json.JSONDecodeError, OSError):
-        return None
-    # a non-dict manifest (valid JSON, wrong shape) reads as pending too
-    return rec if isinstance(rec, dict) else None
-
-
-def _commit_stage_manifest(out_path: str, name: str, rec: dict) -> None:
-    """Stage commit under the shared atomic protocol; committed only
-    AFTER the stage's data write succeeded, so a kill mid-stage leaves
-    no manifest and the stage re-runs from scratch."""
-    _atomic_write_json(_stage_manifest_path(out_path, name), rec)
+    """A named (non-bucket) stage's committed manifest, or None (missing
+    or unreadable: stage pending)."""
+    return _read_record(_stage_manifest_path(out_path, name))
 
 
 def _clear_stage_manifest(out_path: str, name: str) -> None:
@@ -131,6 +115,45 @@ def _clear_stage_manifest(out_path: str, name: str) -> None:
         os.remove(_stage_manifest_path(out_path, name))
     except FileNotFoundError:
         pass
+
+
+def _stage_guard(out_path: str, name: str, config: dict, refusal: str, *,
+                 resume: bool = True,
+                 legacy: dict | None = None) -> dict | None:
+    """The resume decision of every named stage: the committed ``done``
+    record when ``resume`` and its config matches; a ValueError built
+    from ``refusal`` (a format string over ``out``, ``name``, ``got``
+    and ``config``) when it does not; otherwise None, after clearing the
+    stage's manifest so the caller re-runs it from scratch.
+
+    ``legacy`` fills config keys a stage committed before they existed
+    (absent means the stage ran without that option)."""
+    prior = read_stage_manifest(out_path, name) if resume else None
+    if prior and prior.get("status") == "done":
+        got = prior.get("config")
+        if legacy and isinstance(got, dict):
+            got = dict(got)
+            for k, v in legacy.items():
+                got.setdefault(k, v)
+        if got != config:
+            raise ValueError(refusal.format(out=out_path, name=name,
+                                            got=got, config=config))
+        return prior
+    _clear_stage_manifest(out_path, name)
+    return None
+
+
+def _stage_commit(out_path: str, name: str, config: dict, started: float,
+                  **payload) -> dict:
+    """Commit stage ``name`` — only AFTER its data write succeeded, so a
+    kill mid-stage leaves no manifest and the stage re-runs. Returns
+    the committed record."""
+    finished = time.time()
+    rec = {"stage": name, "status": "done", **payload, "config": config,
+           "started": started, "finished": finished,
+           "wall_sec": round(finished - started, 3)}
+    _atomic_write_json(_stage_manifest_path(out_path, name), rec)
+    return rec
 
 
 def lineage_table(spark: SparkSession, out_path: str):
@@ -157,9 +180,82 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _committed_buckets(out_path: str, config: dict,
+                       consequence: str) -> dict[int, dict]:
+    """The committed bucket manifests, refused unless every one was
+    committed under ``config``. Committed buckets are only resumable
+    under the SAME bucketing, output schema and keep rules (resuming
+    an --entities run over a plain one would silently serve
+    half the conversations without entity columns; a different
+    n_buckets would double-write rows; a different min_tokens would mix
+    keep semantics). A manifest with NO recorded config (pre-guard
+    rounds) must read as a MISMATCH, not default to the current config —
+    defaulting passed exactly the legacy outputs the guard exists to
+    protect. Callers check this BEFORE any stage work."""
+    done = read_manifest(out_path)
+    stale = [b for b, rec in done.items() if rec.get("config") != config]
+    if stale:
+        raise ValueError(
+            f"output {out_path!r} holds buckets committed with a "
+            f"different configuration (e.g. bucket {stale[0]}: "
+            f"{done[stale[0]].get('config')} vs {config}); resuming "
+            f"would {consequence} — use a fresh output directory or "
+            "matching arguments")
+    return done
+
+
+def _run_buckets(out_path: str, done: dict[int, dict], config: dict,
+                 bucket_job, *, n_buckets: int, max_buckets: int | None,
+                 counts: tuple[str, ...] = (), line: str,
+                 log) -> dict:
+    """The bucket loop shared by both checkpointed drivers: skip buckets
+    whose manifest says ``done``, process at most ``max_buckets`` pending
+    ones, write each into its own ``bucket=K`` directory (overwrite, so
+    re-running a bucket replaces it wholly) and commit its manifest
+    AFTER the data write.
+
+    ``bucket_job(bucket)`` returns ``(df, lineage)``: the bucket's
+    output DataFrame with its Observations attached, and a callable
+    reading them after the write into the manifest's count fields
+    (``rows_in``, ``rows_out``, plus the caller's extra ``counts``).
+    ``line`` formats the per-bucket log line from the record. Returns
+    the aggregate stats over processed and skipped buckets."""
+    summed = ("rows_in", "rows_out", *counts, "bytes_out", "failures")
+    stats = dict.fromkeys((*summed, "buckets_done", "buckets_skipped"), 0)
+    for bucket in range(n_buckets):
+        rec = done.get(bucket)
+        if rec and rec.get("status") == "done":
+            stats["buckets_skipped"] += 1
+        elif max_buckets is not None and stats["buckets_done"] >= max_buckets:
+            continue
+        else:
+            started = time.time()
+            df, lineage = bucket_job(bucket)
+            bucket_dir = os.path.join(out_path, f"bucket={bucket}")
+            df.write.mode("overwrite").parquet(bucket_dir)
+            finished = time.time()
+            rec = {"partition": bucket, "status": "done", **lineage(),
+                   "bytes_out": _dir_bytes(bucket_dir), "failures": 0,
+                   "config": config, "started": started,
+                   "finished": finished,
+                   "wall_sec": round(finished - started, 3)}
+            _atomic_write_json(_manifest_path(out_path, bucket), rec)
+            stats["buckets_done"] += 1
+            log(line.format(n_buckets=n_buckets, **rec))
+        for k in summed:
+            stats[k] += rec.get(k, 0)
+    # a max_buckets-limited run must be distinguishable from a complete
+    # one — its aggregate counts cover only the processed+skipped subset
+    # (run_prepare_stages marks partial runs the same way)
+    pending = n_buckets - stats["buckets_done"] - stats["buckets_skipped"]
+    if pending > 0:
+        stats["buckets_pending"] = pending
+        stats["incomplete"] = True
+    return stats
+
+
 def run_checkpointed(spark: SparkSession, in_path: str, out_path: str, *,
-                     n_buckets: int = 16, salt_buckets: int = 16,
-                     include_entities: bool = False,
+                     n_buckets: int = 16, include_entities: bool = False,
                      max_buckets: int | None = None,
                      log=print) -> dict:
     """Process bucket-by-bucket with resume. Returns aggregate stats.
@@ -197,44 +293,15 @@ def run_checkpointed(spark: SparkSession, in_path: str, out_path: str, *,
             "silently clobber and drop the input's; rename it upstream")
     src = src.withColumn("_bucket",
                          F.pmod(F.hash("conv_id"), F.lit(n_buckets)))
-    done = read_manifest(out_path)
-    # committed buckets are only resumable under the SAME bucketing and
-    # output schema (r7 review: resuming an --entities run over a plain
-    # one would silently serve half the conversations without entity
-    # columns; a different n_buckets would double-write rows). A manifest
-    # with NO recorded config (pre-guard rounds) must read as a MISMATCH,
-    # not default to the current config — defaulting passed exactly the
-    # legacy outputs the guard exists to protect (r7 review #2).
     config = {"n_buckets": n_buckets,
               "include_entities": include_entities}
-    stale = [b for b, rec in done.items()
-             if rec.get("config") != config]
-    if stale:
-        raise ValueError(
-            f"output {out_path!r} holds buckets committed with a "
-            f"different configuration (e.g. bucket {stale[0]}: "
-            f"{done[stale[0]].get('config')} vs {config}); resuming "
-            "would mix schemas or bucketing — use a fresh output "
-            "directory or matching arguments")
-    stats = {"rows_in": 0, "rows_out": 0, "bytes_out": 0, "failures": 0,
-             "buckets_done": 0, "buckets_skipped": 0}
-    processed = 0
-    for bucket in range(n_buckets):
-        prior = done.get(bucket)
-        if prior and prior.get("status") == "done":
-            stats["buckets_skipped"] += 1
-            stats["rows_in"] += prior["rows_in"]
-            stats["rows_out"] += prior["rows_out"]
-            stats["bytes_out"] += prior.get("bytes_out", 0)
-            continue
-        if max_buckets is not None and processed >= max_buckets:
-            continue
-        started = time.time()
+    done = _committed_buckets(out_path, config, "mix schemas or bucketing")
+
+    def bucket_job(bucket):
         obs_in = Observation(f"in_{bucket}")
         obs_out = Observation(f"out_{bucket}")
         part = src.filter(F.col("_bucket") == bucket).drop("_bucket")
         out = extraction_pipeline(part, salt_partitions=bucket_partitions,
-                                  salt_buckets=salt_buckets,
                                   include_entities=include_entities,
                                   input_observation=obs_in)
         # BOTH lineage counts ride the single write job: rows_in is
@@ -243,34 +310,14 @@ def run_checkpointed(spark: SparkSession, in_path: str, out_path: str, *,
         # no extra per-bucket scan; VERDICT r2 'What's wrong' #2),
         # rows_out above the final projection.
         out = out.observe(obs_out, F.count(F.lit(1)).alias("n"))
-        bucket_dir = os.path.join(out_path, f"bucket={bucket}")
-        out.write.mode("overwrite").parquet(bucket_dir)
-        rows_out = obs_out.get["n"]
-        rows_in = obs_in.get["n"]
-        rec = {
-            "partition": bucket, "status": "done",
-            "rows_in": rows_in, "rows_out": rows_out,
-            "bytes_out": _dir_bytes(bucket_dir),
-            "failures": 0, "config": config,
-            "started": started, "finished": time.time(),
-            "wall_sec": round(time.time() - started, 3),
-        }
-        _commit_manifest(out_path, rec)
-        processed += 1
-        stats["buckets_done"] += 1
-        stats["rows_in"] += rows_in
-        stats["rows_out"] += rows_out
-        stats["bytes_out"] += rec["bytes_out"]
-        log(f"[checkpoint] bucket {bucket}/{n_buckets}: "
-            f"{rows_out} rows, {rec['wall_sec']}s")
-    # a max_buckets-limited run must be distinguishable from a complete
-    # one — its aggregate counts cover only the processed+skipped subset
-    # (r7 review; run_prepare_stages already marks partial runs)
-    pending = n_buckets - stats["buckets_done"] - stats["buckets_skipped"]
-    if pending > 0:
-        stats["buckets_pending"] = pending
-        stats["incomplete"] = True
-    return stats
+        return out, lambda: {"rows_in": obs_in.get["n"],
+                             "rows_out": obs_out.get["n"]}
+
+    return _run_buckets(
+        out_path, done, config, bucket_job, n_buckets=n_buckets,
+        max_buckets=max_buckets, log=log,
+        line="[checkpoint] bucket {partition}/{n_buckets}: "
+             "{rows_out} rows, {wall_sec}s")
 
 
 def zero_nulls(metrics) -> dict:
@@ -279,6 +326,27 @@ def zero_nulls(metrics) -> dict:
     (``rows - surviving`` etc.) would raise TypeError on an empty input
     or an all-dropped filter AFTER the writes already succeeded."""
     return {k: (0 if v is None else v) for k, v in dict(metrics).items()}
+
+
+def drop_accounting(*, near_dedup: bool, lm: bool,
+                    contaminated: bool = False):
+    """The drop reasons in report order and their Observation metrics
+    (``rows``, ``kept``, then one flag sum per reason) — the accounting
+    ``job.py --curate`` and the prepare corpus stage both print. Returns
+    ``(reasons, metrics)``."""
+    reasons = ["dup", "bad_lang", "bad_len", "low_conf"]
+    if near_dedup:
+        reasons.insert(1, "near_dup")
+    if lm:
+        reasons.append("high_perplexity")
+    if contaminated:
+        reasons.append("contaminated")
+    flag_col = {"dup": "is_dup", "near_dup": "is_near_dup"}
+    metrics = [F.count(F.lit(1)).alias("rows"),
+               F.sum(F.col("keep").cast("int")).alias("kept")] + [
+        F.sum(F.col(flag_col.get(r, r)).cast("int")).alias(r)
+        for r in reasons]
+    return reasons, metrics
 
 
 def _effective_curation_config(curate_kw: dict) -> dict:
@@ -339,20 +407,17 @@ def _bucketize_stage(spark: SparkSession, in_path: str, out_path: str, *,
 
     staged = os.path.join(out_path, STAGED_DIR)
     config = {"n_buckets": n_buckets, "text_col": text_col}
-    prior = read_stage_manifest(out_path, BUCKETIZE_STAGE)
-    if prior and prior.get("status") == "done":
-        if prior.get("config") != config:
-            raise ValueError(
-                f"bucketize stage in {out_path!r} was committed with "
-                f"different parameters ({prior.get('config')} vs "
-                f"{config}); resuming would mis-route rows across "
-                "buckets — use a fresh output directory or matching "
-                "arguments")
+    prior = _stage_guard(
+        out_path, BUCKETIZE_STAGE, config,
+        "bucketize stage in {out!r} was committed with different "
+        "parameters ({got} vs {config}); resuming would mis-route rows "
+        "across buckets — use a fresh output directory or matching "
+        "arguments")
+    if prior:
         rows = prior["rows_out"]
         log(f"[curate-checkpoint] bucketize stage: skipped "
             f"({rows} rows staged)")
         return (staged if rows else None), rows
-    _clear_stage_manifest(out_path, BUCKETIZE_STAGE)
     started = time.time()
     src = spark.read.parquet(in_path)
     if "bucket" in src.columns:
@@ -368,14 +433,8 @@ def _bucketize_stage(spark: SparkSession, in_path: str, out_path: str, *,
     (src.observe(obs, F.count(F.lit(1)).alias("n"))
         .write.mode("overwrite").partitionBy("bucket").parquet(staged))
     rows = int(obs.get["n"] or 0)
-    rec = {
-        "stage": BUCKETIZE_STAGE, "status": "done",
-        "rows_out": rows, "bytes_out": _dir_bytes(staged),
-        "config": config,
-        "started": started, "finished": time.time(),
-        "wall_sec": round(time.time() - started, 3),
-    }
-    _commit_stage_manifest(out_path, BUCKETIZE_STAGE, rec)
+    rec = _stage_commit(out_path, BUCKETIZE_STAGE, config, started,
+                        rows_out=rows, bytes_out=_dir_bytes(staged))
     log(f"[curate-checkpoint] bucketize stage: {rows} rows, "
         f"{rec['wall_sec']}s")
     return (staged if rows else None), rows
@@ -410,19 +469,16 @@ def _near_reps_stage(spark: SparkSession, in_path: str, out_path: str,
     config = {k: eff[k] for k in ("id_col", "text_col", "num_hashes",
                                   "bands", "jaccard_threshold",
                                   "max_iter", "max_bucket")}
-    prior = read_stage_manifest(out_path, NEAR_REPS_STAGE)
-    if prior and prior.get("status") == "done":
-        if prior.get("config") != config:
-            raise ValueError(
-                f"near-reps stage in {out_path!r} was committed with "
-                f"different parameters ({prior.get('config')} vs "
-                f"{config}); resuming would reuse representatives from "
-                "the wrong clustering — use a fresh output directory "
-                "or matching parameters")
+    prior = _stage_guard(
+        out_path, NEAR_REPS_STAGE, config,
+        "near-reps stage in {out!r} was committed with different "
+        "parameters ({got} vs {config}); resuming would reuse "
+        "representatives from the wrong clustering — use a fresh output "
+        "directory or matching parameters")
+    if prior:
         log(f"[curate-checkpoint] reps stage: skipped "
             f"({prior['rows_out']} reps committed)")
         return spark.read.parquet(reps_dir)
-    _clear_stage_manifest(out_path, NEAR_REPS_STAGE)
     started = time.time()
     src = spark.read.parquet(in_path)
     # band only exact-dup representatives (r7 review, the same collapse
@@ -443,14 +499,9 @@ def _near_reps_stage(spark: SparkSession, in_path: str, out_path: str,
     obs = Observation("near_reps")
     (reps.observe(obs, F.count(F.lit(1)).alias("n"))
          .write.mode("overwrite").parquet(reps_dir))
-    rec = {
-        "stage": NEAR_REPS_STAGE, "status": "done",
-        "rows_out": obs.get["n"], "bytes_out": _dir_bytes(reps_dir),
-        "config": config,
-        "started": started, "finished": time.time(),
-        "wall_sec": round(time.time() - started, 3),
-    }
-    _commit_stage_manifest(out_path, NEAR_REPS_STAGE, rec)
+    rec = _stage_commit(out_path, NEAR_REPS_STAGE, config, started,
+                        rows_out=obs.get["n"],
+                        bytes_out=_dir_bytes(reps_dir))
     log(f"[curate-checkpoint] reps stage: {rec['rows_out']} reps, "
         f"{rec['wall_sec']}s")
     return spark.read.parquet(reps_dir)
@@ -487,32 +538,13 @@ def run_checkpointed_curation(spark: SparkSession, in_path: str,
 
     from documentai_spark.operators.curation import curate_documents
 
-    done = read_manifest(out_path)
-    mismatched = [b for b, rec in done.items()
-                  if bool(rec.get("near_dedup", False)) != near_dedup]
-    if mismatched:
-        raise ValueError(
-            f"output {out_path!r} holds buckets committed with "
-            f"near_dedup={not near_dedup} (e.g. bucket {mismatched[0]}); "
-            "resuming with a different flag mode would mix schemas — "
-            "use a fresh output directory")
-    # beyond the flag mode, committed keep decisions are only resumable
-    # under the SAME thresholds (r7 review: a resumed run with a
-    # different min_tokens would mix keep semantics across buckets).
-    # Defaults are baked in (_effective_curation_config) so explicit-vs-
-    # omitted spellings of the same thresholds resume; a manifest with
-    # NO config (pre-guard rounds) reads as a mismatch, never as a pass.
+    # committed keep decisions are only resumable under the SAME flag
+    # mode (the schemas differ) and thresholds. Defaults are baked in
+    # (_effective_curation_config) so explicit-vs-omitted spellings of
+    # the same thresholds resume.
     config = {"n_buckets": n_buckets, "near_dedup": near_dedup,
               "curate": _effective_curation_config(curate_kw)}
-    stale = [b for b, rec in done.items()
-             if rec.get("config") != config]
-    if stale:
-        raise ValueError(
-            f"output {out_path!r} holds buckets committed with a "
-            f"different configuration (e.g. bucket {stale[0]}: "
-            f"{done[stale[0]].get('config')} vs {config}); resuming "
-            "would mix keep semantics — use a fresh output directory "
-            "or matching arguments")
+    done = _committed_buckets(out_path, config, "mix keep semantics")
     # the bucketize stage's own config guard covers n_buckets/text_col
     # (a committed staging table with a different bucket count would
     # mis-route every row); committed bucket manifests predating a
@@ -532,23 +564,9 @@ def run_checkpointed_curation(spark: SparkSession, in_path: str,
         # (empty) raw input preserve the pre-staging output shape
         src = spark.read.parquet(in_path).withColumn(
             "bucket", F.lit(0))
-    stats = {"rows_in": 0, "rows_out": 0, "kept": 0, "near_dup": 0,
-             "bytes_out": 0, "failures": 0, "buckets_done": 0,
-             "buckets_skipped": 0}
-    processed = 0
-    for bucket in range(n_buckets):
-        prior = done.get(bucket)
-        if prior and prior.get("status") == "done":
-            stats["buckets_skipped"] += 1
-            stats["rows_in"] += prior["rows_in"]
-            stats["rows_out"] += prior["rows_out"]
-            stats["kept"] += prior.get("kept", 0)
-            stats["near_dup"] += prior.get("near_dup", 0)
-            stats["bytes_out"] += prior.get("bytes_out", 0)
-            continue
-        if max_buckets is not None and processed >= max_buckets:
-            continue
-        started = time.time()
+    counts = ("kept", "near_dup") if near_dedup else ("kept",)
+
+    def bucket_job(bucket):
         # partition-column filter -> directory pruning: each bucket job
         # reads ONLY its staged directory (no full-table re-scan, no
         # re-normalization; the r7 repartition that round-tripped the
@@ -563,40 +581,19 @@ def run_checkpointed_curation(spark: SparkSession, in_path: str,
         if near_dedup:
             metrics.append(F.sum(F.col("is_near_dup").cast("long"))
                            .alias("near_dup"))
-        out = out.observe(obs, *metrics)
-        bucket_dir = os.path.join(out_path, f"bucket={bucket}")
-        out.write.mode("overwrite").parquet(bucket_dir)
-        acc = zero_nulls(obs.get)
-        n = acc["n"]
-        kept = acc["kept"]
-        near = acc.get("near_dup", 0)
-        rec = {
-            "partition": bucket, "status": "done",
-            "rows_in": n, "rows_out": n, "kept": kept,
-            "near_dedup": near_dedup, "config": config,
-            "bytes_out": _dir_bytes(bucket_dir), "failures": 0,
-            "started": started, "finished": time.time(),
-            "wall_sec": round(time.time() - started, 3),
-        }
-        if near_dedup:
-            rec["near_dup"] = near
-        _commit_manifest(out_path, rec)
-        processed += 1
-        stats["buckets_done"] += 1
-        stats["rows_in"] += n
-        stats["rows_out"] += n
-        stats["kept"] += kept
-        stats["near_dup"] += near
-        stats["bytes_out"] += rec["bytes_out"]
-        log(f"[curate-checkpoint] bucket {bucket}/{n_buckets}: "
-            f"{n} rows ({kept} kept), {rec['wall_sec']}s")
-    if not near_dedup:
-        del stats["near_dup"]
-    pending = n_buckets - stats["buckets_done"] - stats["buckets_skipped"]
-    if pending > 0:
-        stats["buckets_pending"] = pending
-        stats["incomplete"] = True
-    return stats
+
+        def lineage():
+            acc = zero_nulls(obs.get)
+            return {"rows_in": acc["n"], "rows_out": acc["n"],
+                    "near_dedup": near_dedup,
+                    **{k: acc[k] for k in counts}}
+        return out.observe(obs, *metrics), lineage
+
+    return _run_buckets(
+        out_path, done, config, bucket_job, n_buckets=n_buckets,
+        max_buckets=max_buckets, counts=counts, log=log,
+        line="[curate-checkpoint] bucket {partition}/{n_buckets}: "
+             "{rows_out} rows ({kept} kept), {wall_sec}s")
 
 
 PREPARE_CORPUS_STAGE = "prepare-corpus"
@@ -707,54 +704,41 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
               "pack_shards": pack_shards,
               "lm_threshold": lm_threshold}
 
-    def _check_config(rec: dict, stage: str) -> None:
-        rec_config = rec.get("config")
-        if isinstance(rec_config, dict):
-            # pre-r8 manifests predate the lm_threshold key; absent
-            # means the stage was committed with no LM filter, which is
-            # exactly lm_threshold=None — keep those exports resumable
-            # instead of refusing with an unsatisfiable error
-            rec_config = dict(rec_config)
-            rec_config.setdefault("lm_threshold", None)
-        if rec_config != config:
-            raise ValueError(
-                f"stage {stage!r} in {out_path!r} was committed with a "
-                f"different configuration ({rec_config} vs "
-                f"{config}); resuming would mix exports — use a fresh "
-                "output directory or matching arguments")
+    def guard(stage: str) -> dict | None:
+        # pre-r8 manifests predate the lm_threshold key; absent means
+        # the stage was committed with no LM filter, which is exactly
+        # lm_threshold=None — keep those exports resumable instead of
+        # refusing with an unsatisfiable error
+        return _stage_guard(
+            out_path, stage, config,
+            "stage {name!r} in {out!r} was committed with a different "
+            "configuration ({got} vs {config}); resuming would mix "
+            "exports — use a fresh output directory or matching "
+            "arguments", resume=resume, legacy={"lm_threshold": None})
 
     corpus_path = os.path.join(out_path, "corpus")
     assign_path = os.path.join(out_path, "assignment")
-    reasons = ["dup", "bad_lang", "bad_len", "low_conf"]
-    if near_dedup:
-        reasons.insert(1, "near_dup")
-    if lm_threshold is not None:
-        reasons.append("high_perplexity")
-    if benchmark is not None:
-        reasons.append("contaminated")
-    flag_col = {"dup": "is_dup", "near_dup": "is_near_dup"}
+    reasons, flag_metrics = drop_accounting(
+        near_dedup=near_dedup, lm=lm_threshold is not None,
+        contaminated=benchmark is not None)
 
     t0 = time.time()
     executed = 0
     skipped: list[str] = []
 
     # ---- stage 1: corpus ----
-    prior = read_stage_manifest(out_path, PREPARE_CORPUS_STAGE) \
-        if resume else None
-    if prior and prior.get("status") == "done":
-        _check_config(prior, PREPARE_CORPUS_STAGE)
+    prior = guard(PREPARE_CORPUS_STAGE)
+    if prior:
         acc, acc_c = prior["acc"], prior["acc_c"]
         skipped.append("corpus")
         log(f"[prepare] corpus stage: skipped "
             f"({acc_c['rows']} rows committed)")
     else:
-        # invalidate BOTH manifests before re-executing the corpus
-        # stage (r7 review): a crash mid-recompute must not leave a
-        # prior run's 'done' corpus manifest over half-overwritten
-        # data, and any corpus re-execution makes a prior assignment
-        # (packed from the OLD corpus) stale too — including every
-        # per-split pack manifest (r8: split-granular commits)
-        _clear_stage_manifest(out_path, PREPARE_CORPUS_STAGE)
+        # the guard cleared the corpus manifest; any corpus re-execution
+        # also makes a prior assignment (packed from the OLD corpus)
+        # stale — including every per-split pack manifest (r8:
+        # split-granular commits) — so invalidate those BEFORE
+        # re-executing too
         _clear_stage_manifest(out_path, PREPARE_ASSIGN_STAGE)
         for _s in weights:
             _clear_stage_manifest(out_path,
@@ -783,12 +767,9 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
             surviving = F.col("keep")
             if benchmark is not None:
                 surviving = surviving & ~F.col("contaminated")
-            metrics = [
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("keep").cast("int")).alias("kept"),
-                F.sum(surviving.cast("int")).alias("surviving"),
-            ] + [F.sum(F.col(flag_col.get(r, r)).cast("int")).alias(r)
-                 for r in reasons]
+            metrics = list(flag_metrics)
+            metrics.insert(2, F.sum(surviving.cast("int"))
+                           .alias("surviving"))
             if mixture_rates:
                 # per-source composition BEFORE thinning: indicator
                 # sums over the known rate keys ride the same
@@ -821,12 +802,9 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
              .parquet(corpus_path))
         acc = zero_nulls(obs_flags.get)
         acc_c = zero_nulls(obs_corpus.get)
-        _commit_stage_manifest(out_path, PREPARE_CORPUS_STAGE, {
-            "stage": PREPARE_CORPUS_STAGE, "status": "done",
-            "acc": acc, "acc_c": acc_c, "config": config,
-            "bytes_out": _dir_bytes(corpus_path),
-            "started": started, "finished": time.time(),
-            "wall_sec": round(time.time() - started, 3)})
+        _stage_commit(out_path, PREPARE_CORPUS_STAGE, config, started,
+                      acc=acc, acc_c=acc_c,
+                      bytes_out=_dir_bytes(corpus_path))
         executed += 1
         log(f"[prepare] corpus stage: {acc_c['rows']} rows, "
             f"{round(time.time() - started, 1)}s")
@@ -872,91 +850,73 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
     # byte-identical to the single-pass pack. The aggregate
     # PREPARE_ASSIGN_STAGE manifest still commits last (the fast
     # full-replay path and the _line() accounting source).
-    prior = read_stage_manifest(out_path, PREPARE_ASSIGN_STAGE) \
-        if resume else None
-    if prior and prior.get("status") == "done":
-        _check_config(prior, PREPARE_ASSIGN_STAGE)
+    prior = guard(PREPARE_ASSIGN_STAGE)
+    if prior:
         skipped.append("assignment")
         log("[prepare] assignment stage: skipped")
         return _line(prior["acc_p"], prior["seqs"])
     if max_stages is not None and executed >= max_stages:
         return _line({"rows": 0, "oversize": 0}, {}, incomplete=True)
-    _clear_stage_manifest(out_path, PREPARE_ASSIGN_STAGE)
     started = time.time()
     acc_p = {"rows": 0, "oversize": 0}
     seqs: dict = {}
-    split_names = sorted(weights)
     if not resume:
         # a non-resumed recompute must not inherit any prior run's
-        # per-split packs (same invalidation rule as the corpus stage)
-        for s in split_names:
-            _clear_stage_manifest(out_path,
-                                  f"{PREPARE_ASSIGN_STAGE}-{s}")
+        # per-split pack data (the corpus stage already invalidated
+        # their manifests)
         shutil.rmtree(assign_path, ignore_errors=True)
     packed_now = 0
-    for s in split_names:
+    for s in sorted(weights):
         stage_s = f"{PREPARE_ASSIGN_STAGE}-{s}"
-        pm = read_stage_manifest(out_path, stage_s) if resume else None
-        if pm and pm.get("status") == "done":
-            _check_config(pm, stage_s)
-            acc_p["rows"] += pm["acc_p"]["rows"]
-            acc_p["oversize"] += pm["acc_p"]["oversize"]
-            if pm["n_sequences"]:
-                seqs[s] = pm["n_sequences"]
+        pm = guard(stage_s)
+        if pm:
             log(f"[prepare] assignment split {s!r}: skipped "
                 f"({pm['acc_p']['rows']} docs committed)")
-            continue
-        if max_assign_splits is not None \
+        elif max_assign_splits is not None \
                 and packed_now >= max_assign_splits:
             # kill-analog hook: some splits committed, the rest (and
             # the aggregate manifest) pending — a resume finishes them
             return _line(acc_p, seqs, incomplete=True)
-        _clear_stage_manifest(out_path, stage_s)
-        s_started = time.time()
-        split_rows = acc_c.get(f"split_{s}", 0)
-        split_dir = os.path.join(assign_path, f"split={s}")
-        if split_rows == 0:
-            # a write of nothing leaves no parquet files, so the seqs
-            # re-read would die with UNABLE_TO_INFER_SCHEMA — record
-            # the empty split instead
-            n_seq = 0
-            p_acc = {"rows": 0, "oversize": 0}
-            shutil.rmtree(split_dir, ignore_errors=True)
         else:
-            obs_pack = Observation(f"prepare_pack_{s}")
-            assign_s = pack_corpus(
-                spark.read.parquet(corpus_path)
-                     .filter(F.col("split") == s),
-                budget=budget, n_shards=n_shards, est_rows=split_rows)
-            # write into the hive split=<s> leaf directly (the same
-            # layout partitionBy produced); overwrite replaces only
-            # this split's data on a mid-split resume
-            (assign_s.observe(
-                    obs_pack, F.count(F.lit(1)).alias("rows"),
-                    F.sum(F.col("oversize").cast("int"))
-                     .alias("oversize"))
-                .drop("split")
-                .write.mode("overwrite").parquet(split_dir))
-            p_acc = zero_nulls(obs_pack.get)
-            n_seq = (spark.read.parquet(split_dir)
-                     .select("shard", "bin").distinct().count())
-        _commit_stage_manifest(out_path, stage_s, {
-            "stage": stage_s, "status": "done", "acc_p": p_acc,
-            "n_sequences": n_seq, "config": config,
-            "started": s_started, "finished": time.time(),
-            "wall_sec": round(time.time() - s_started, 3)})
-        acc_p["rows"] += p_acc["rows"]
-        acc_p["oversize"] += p_acc["oversize"]
-        if n_seq:
-            seqs[s] = n_seq
-        packed_now += 1
-        log(f"[prepare] assignment split {s!r}: {p_acc['rows']} docs "
-            f"packed, {round(time.time() - s_started, 1)}s")
-    _commit_stage_manifest(out_path, PREPARE_ASSIGN_STAGE, {
-        "stage": PREPARE_ASSIGN_STAGE, "status": "done",
-        "acc_p": acc_p, "seqs": seqs, "config": config,
-        "started": started, "finished": time.time(),
-        "wall_sec": round(time.time() - started, 3)})
+            s_started = time.time()
+            split_rows = acc_c.get(f"split_{s}", 0)
+            split_dir = os.path.join(assign_path, f"split={s}")
+            if split_rows == 0:
+                # a write of nothing leaves no parquet files, so the
+                # seqs re-read would die with UNABLE_TO_INFER_SCHEMA —
+                # record the empty split instead
+                n_seq = 0
+                p_acc = {"rows": 0, "oversize": 0}
+                shutil.rmtree(split_dir, ignore_errors=True)
+            else:
+                obs_pack = Observation(f"prepare_pack_{s}")
+                assign_s = pack_corpus(
+                    spark.read.parquet(corpus_path)
+                         .filter(F.col("split") == s),
+                    budget=budget, n_shards=n_shards, est_rows=split_rows)
+                # write into the hive split=<s> leaf directly (the same
+                # layout partitionBy produced); overwrite replaces only
+                # this split's data on a mid-split resume
+                (assign_s.observe(
+                        obs_pack, F.count(F.lit(1)).alias("rows"),
+                        F.sum(F.col("oversize").cast("int"))
+                         .alias("oversize"))
+                    .drop("split")
+                    .write.mode("overwrite").parquet(split_dir))
+                p_acc = zero_nulls(obs_pack.get)
+                n_seq = (spark.read.parquet(split_dir)
+                         .select("shard", "bin").distinct().count())
+            pm = _stage_commit(out_path, stage_s, config, s_started,
+                               acc_p=p_acc, n_sequences=n_seq)
+            packed_now += 1
+            log(f"[prepare] assignment split {s!r}: {p_acc['rows']} "
+                f"docs packed, {round(time.time() - s_started, 1)}s")
+        for k in acc_p:
+            acc_p[k] += pm["acc_p"][k]
+        if pm["n_sequences"]:
+            seqs[s] = pm["n_sequences"]
+    _stage_commit(out_path, PREPARE_ASSIGN_STAGE, config, started,
+                  acc_p=acc_p, seqs=seqs)
     log(f"[prepare] assignment stage: {acc_p['rows']} docs packed, "
         f"{round(time.time() - started, 1)}s")
     return _line(acc_p, seqs)

@@ -8,8 +8,8 @@ intermediate files (SURVEY §3.1 "Spark rewrite"):
 
     read transcripts
       -> salted repartition (skew defusal; the ONLY shuffle before write)
-      -> extract_udf   (kind dispatch -> extracted_text + spans)
-      -> quality_udf   (the ten q_* metric columns of the 10-metric ensemble)
+      -> extract_quality_udf (kind dispatch -> extracted_text + spans, and
+                              the ten q_* metric columns, in one UDF)
       -> confidence + verdict + routing + recommendations (pure SQL)
       -> [optional] entity_udf
       -> restore (conv_id, turn_idx) order  (range exchange, W1)
@@ -20,7 +20,7 @@ Scale notes (the 100 TB story):
   range exchange for ordered output. Everything between is pipelined
   per-partition work with Arrow batches.
 - The scan ships only the needed columns into Python (column pruning holds:
-  extract_udf reads ``text`` alone).
+  extract_quality_udf reads ``text`` alone).
 - No collect, no driver-side loops; output partitioning by bucket(conv_id)
   keeps downstream per-conversation reads co-located.
 """

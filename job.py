@@ -89,7 +89,6 @@ def main() -> None:
                          "canonical schema, permissive corrupt-row drop; "
                          "parquet/Iceberg is the at-scale path — "
                          "default-path runs only)")
-    ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--resume", action="store_true",
                     help="checkpointed per-partition run with resume")
     ap.add_argument("--curate", action="store_true",
@@ -254,8 +253,7 @@ def main() -> None:
             .write.format("noop").mode("overwrite").save()
         obs = Observation("rows")
         t0 = time.time()
-        df = extraction_pipeline(src, include_entities=args.entities,
-                                 salt_buckets=args.salt_buckets)
+        df = extraction_pipeline(src, include_entities=args.entities)
         if args.bench == "classify":
             from documentai_spark.operators.classify import (
                 ClassifierConfig, classify_with_vote,
@@ -478,6 +476,7 @@ def main() -> None:
         from pyspark.sql.observation import Observation
 
         from documentai_spark.operators.curation import curate_documents
+        from documentai_spark.plans.checkpoint import drop_accounting
         t0 = time.time()
         out = curate_documents(spark.read.parquet(args.input),
                                near_dedup=args.near_dedup)
@@ -494,22 +493,8 @@ def main() -> None:
         # no output re-read, and `keep` stays boolean here (the hive
         # partition directory stringifies it on disk)
         obs = Observation("curation")
-        reasons = ["dup", "bad_lang", "bad_len", "low_conf"]
-        metrics = [
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col("keep").cast("int")).alias("kept"),
-            F.sum(F.col("is_dup").cast("int")).alias("dup"),
-            F.sum(F.col("bad_lang").cast("int")).alias("bad_lang"),
-            F.sum(F.col("bad_len").cast("int")).alias("bad_len"),
-            F.sum(F.col("low_conf").cast("int")).alias("low_conf")]
-        if args.near_dedup:
-            reasons.insert(1, "near_dup")
-            metrics.append(F.sum(F.col("is_near_dup").cast("int"))
-                           .alias("near_dup"))
-        if args.lm_threshold is not None:
-            reasons.append("high_perplexity")
-            metrics.append(F.sum(F.col("high_perplexity").cast("int"))
-                           .alias("high_perplexity"))
+        reasons, metrics = drop_accounting(
+            near_dedup=args.near_dedup, lm=args.lm_threshold is not None)
         out = out.observe(obs, *metrics)
         (out.write.mode("overwrite").partitionBy("keep")
             .parquet(args.output))
@@ -549,15 +534,13 @@ def main() -> None:
     if args.resume:
         from documentai_spark.plans.checkpoint import run_checkpointed
         stats = run_checkpointed(spark, args.input, args.output,
-                                 include_entities=args.entities,
-                                 salt_buckets=args.salt_buckets)
+                                 include_entities=args.entities)
         rows = stats["rows_out"]
     else:
         from documentai_spark.plans.pipeline import run_pipeline
         run_pipeline(spark, args.input, args.output,
                      input_format=args.input_format,
-                     include_entities=args.entities,
-                     salt_buckets=args.salt_buckets)
+                     include_entities=args.entities)
         rows = spark.read.parquet(args.output).count()
     wall = time.time() - t0
     print(json.dumps({"rows": rows, "sec": round(wall, 2),

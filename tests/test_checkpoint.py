@@ -4,6 +4,8 @@ metrics consistent (no double-count)."""
 
 from __future__ import annotations
 
+import pytest
+
 from documentai_spark.plans.checkpoint import read_manifest, run_checkpointed
 from documentai_spark.plans.pipeline import extraction_pipeline
 
@@ -612,27 +614,66 @@ def test_legacy_manifest_without_config_is_stale(spark, transcripts_path,
                          log=lambda *a: None)
 
 
-def test_manifest_wrong_shape_json_reads_as_pending(tmp_path):
-    """Valid JSON that is not a bucket record (a list, or a dict without
-    'partition') must read as not-done — never KeyError-brick resume
-    (the read_manifest contract; r7 review)."""
+@pytest.mark.parametrize("kind", ["bucket", "stage"])
+def test_manifest_wrong_shape_json_reads_as_pending(tmp_path, kind):
+    """Valid JSON that is not a manifest record (a list, a non-dict, or
+    a bucket dict without an int 'partition') and truncated JSON must
+    read as not-done — never KeyError-brick resume (the read_manifest /
+    read_stage_manifest contract)."""
     import json
     import os
 
-    from documentai_spark.plans.checkpoint import read_manifest
+    from documentai_spark.plans.checkpoint import (
+        read_manifest, read_stage_manifest,
+    )
 
     out = str(tmp_path / "out_shape")
     d = os.path.join(out, "_checkpoints")
     os.makedirs(d)
-    json.dump([1, 2], open(os.path.join(d, "bucket-00000.json"), "w"))
-    json.dump({"status": "done"},
-              open(os.path.join(d, "bucket-00001.json"), "w"))
-    json.dump({"partition": "2", "status": "done"},
-              open(os.path.join(d, "bucket-00002.json"), "w"))
-    json.dump({"partition": 3, "status": "done"},
-              open(os.path.join(d, "bucket-00003.json"), "w"))
-    m = read_manifest(out)
-    assert set(m) == {3}
+    if kind == "bucket":
+        json.dump([1, 2], open(os.path.join(d, "bucket-00000.json"), "w"))
+        json.dump({"status": "done"},
+                  open(os.path.join(d, "bucket-00001.json"), "w"))
+        json.dump({"partition": "2", "status": "done"},
+                  open(os.path.join(d, "bucket-00002.json"), "w"))
+        json.dump({"partition": 3, "status": "done"},
+                  open(os.path.join(d, "bucket-00003.json"), "w"))
+        m = read_manifest(out)
+        assert set(m) == {3}
+        return
+    bad = {"truncated": '{"stage": "truncated", "status": "do',
+           "list": "[1, 2]", "string": '"done"', "number": "7"}
+    for name, body in bad.items():
+        with open(os.path.join(d, f"stage-{name}.json"), "w") as f:
+            f.write(body)
+        assert read_stage_manifest(out, name) is None, name
+    ok = {"stage": "ok", "status": "done"}
+    json.dump(ok, open(os.path.join(d, "stage-ok.json"), "w"))
+    assert read_stage_manifest(out, "ok") == ok
+
+
+def test_prepare_manifest_without_lm_threshold_resumes(spark, tmp_path):
+    """A prepare-corpus manifest committed before the lm_threshold config
+    key existed (pre-r8) was committed without an LM filter: it must
+    resume under lm_threshold=None instead of refusing."""
+    import json
+    import os
+
+    from documentai_spark.plans.checkpoint import run_prepare_stages
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    in_dir = str(tmp_path / "pre_r8_in")
+    docs.write.parquet(in_dir)
+    out = str(tmp_path / "pre_r8_out")
+    kw = dict(budget=120, pack_shards=4, log=lambda *_: None)
+    run_prepare_stages(spark, in_dir, out, resume=True, max_stages=1, **kw)
+    path = os.path.join(out, "_checkpoints", "stage-prepare-corpus.json")
+    rec = json.load(open(path))
+    del rec["config"]["lm_threshold"]
+    json.dump(rec, open(path, "w"))
+    r = run_prepare_stages(spark, in_dir, out, resume=True, **kw)
+    assert r["stages_skipped"] == ["corpus"]
+    assert "incomplete" not in r and r["packed_docs"] > 0
 
 
 def test_resume_accepts_explicitly_spelled_defaults(spark, tmp_path):
