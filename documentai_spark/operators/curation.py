@@ -86,13 +86,12 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
     with_extraction_and_quality + with_verdict upstream — the bench
     and gate shapes do).
 
-    ``near_dedup=True`` (VERDICT r5 #5) additionally runs the full
-    near-dup chain — MinHash-LSH candidates over the EXACT-duplicate
-    representatives only (``dedup.exact_rep_rows``, r7: identical texts
-    band identically, so banding members too was quadratic in the
-    group size) -> shingle-Jaccard verify -> transitive cluster closure
-    (``dedup.near_dedup``'s stages) — and
-    adds ``is_near_dup``: the row is NOT its cluster's min-id
+    ``near_dedup=True`` (VERDICT r5 #5) additionally builds the
+    near-dup representatives in-plan (``dedup.near_dup_reps``:
+    exact-dup representatives -> MinHash-LSH -> shingle-Jaccard verify
+    -> transitive cluster closure) — the form for callers that do not
+    stage the closure (``job.py --curate``, ``prepare_training_data``)
+    — and adds ``is_near_dup``: the row is NOT its cluster's min-id
     representative *and* is not already an exact duplicate, so drop
     accounting attributes near-dup kills separately from exact ones.
     ``keep`` then requires the row to be its cluster representative.
@@ -102,15 +101,16 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
 
     ``near_reps`` (r7, VERDICT r6 #2): a PRECOMPUTED representatives
     table ``(id_col, cluster_rep long)`` — the exact frame
-    ``dedup.cluster_pairs`` returns — to join instead of running the
-    chain. This is the resumable-checkpoint shape: the closure labels
-    GLOBALLY, so a per-bucket loop cannot recompute it per bucket;
-    ``plans.checkpoint.run_checkpointed_curation(near_dedup=True)``
-    computes pairs+closure ONCE as its own manifest-committed stage and
-    passes the written reps here. Flags are identical to
-    ``near_dedup=True`` by construction (the same join, the same
-    long-domain exact-dup winner). Mutually exclusive with
-    ``near_dedup=True``.
+    ``dedup.near_dup_reps`` returns — to join instead of building it.
+    This is the staged shape: the closure labels GLOBALLY, so a
+    per-bucket loop cannot recompute it per bucket;
+    ``plans.checkpoint._near_reps_stage`` builds it ONCE as its own
+    manifest-committed stage for ``run_checkpointed_curation
+    (near_dedup=True)`` and for every ``run_prepare_stages
+    (near_dedup=True)`` export, and passes the written reps here.
+    Flags are identical to ``near_dedup=True`` by construction (the
+    same join, the same long-domain exact-dup winner). Mutually
+    exclusive with ``near_dedup=True``.
     """
     if near_dedup and near_reps is not None:
         raise ValueError("pass near_dedup=True OR near_reps, not both")
@@ -165,26 +165,13 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
     out = out.drop("_ct_fp")
     if use_near:
         if near_reps is None:
-            from documentai_spark.operators.dedup import (
-                cluster_pairs, exact_rep_rows, minhash_dedup_pairs,
-            )
-            # band only exact-dup representatives (r7 review): an
-            # m-copy group's identical signatures otherwise emit
-            # ~bands*m^2/2 LSH candidate rows; members inherit the
-            # verdict through is_dup above (flags unchanged — a
-            # member's is_near_dup was already forced false by ~is_dup)
-            rep_src = exact_rep_rows(df.select(id_col, text_col),
-                                     text_col, id_col,
-                                     context="with_curation_flags")
-            pairs = minhash_dedup_pairs(
-                rep_src, text_col=text_col,
-                id_col=id_col, num_hashes=num_hashes, bands=bands,
+            from documentai_spark.operators.dedup import near_dup_reps
+            reps = near_dup_reps(
+                df, id_col=id_col, text_col=text_col,
+                num_hashes=num_hashes, bands=bands,
                 jaccard_threshold=jaccard_threshold,
-                max_bucket=max_bucket)
-            reps = cluster_pairs(pairs, rep_src.select(id_col),
-                                 a_col="id_a",
-                                 b_col="id_b", id_col=id_col,
-                                 max_iter=max_iter, stats=near_stats)
+                max_bucket=max_bucket, max_iter=max_iter,
+                context="with_curation_flags", stats=near_stats)
         else:
             reps = near_reps.select(id_col, "cluster_rep")
         # checked here TOO (r7 review): relying on dup_id's assert
@@ -661,9 +648,12 @@ def _rep_counts_udf():
     ``len(line.strip(' ')) > 0``, the verified mirror of
     ``length(trim(line)) > 0``; char counts are code points, matching
     ``F.length``) and the max token-bigram count (tokens = the pinned
-    ml_classify ``_WS_SPLIT`` class, bigrams counted as adjacent token
-    PAIRS — tokens cannot contain spaces, so pair identity equals the
-    space-joined gram identity the expression form counts).
+    ml_classify ``_WS_SPLIT`` class over the SECOND argument, the
+    JVM-lowered text — the expression form and the DuckDB oracle
+    lowercase before tokenizing, while the line counters stay on the raw
+    text; bigrams counted as adjacent token PAIRS — tokens cannot
+    contain spaces, so pair identity equals the space-joined gram
+    identity the expression form counts).
 
     Every output is an exact integer; the IEEE ratio math stays in the
     JVM select unchanged. Why: the expression form spent ~6.5 s of
@@ -689,10 +679,10 @@ def _rep_counts_udf():
                  _SF("_top2", LongType(), False)])
 
     @pandas_udf(out_t)
-    def rep_counts(text):  # no hints: annotations future, local imports
+    def rep_counts(text, lowered):  # no hints: annotations future
         from collections import Counter
         nl, nd, dc, tc, t2 = [], [], [], [], []
-        for s in text:
+        for s, low in zip(text, lowered):
             s = s or ""
             lines = Counter(ln for ln in s.split("\n")
                             if len(ln.strip(" ")) > 0)
@@ -703,7 +693,7 @@ def _rep_counts_udf():
                 tot += ch
                 if c > 1:
                     dup += ch
-            toks = [t for t in ws_re.split(s) if t]
+            toks = [t for t in ws_re.split(low or "") if t]
             top2 = 0
             if len(toks) >= 2:
                 top2 = max(Counter(zip(toks, toks[1:])).values())
@@ -744,7 +734,8 @@ def repetition_signals(docs: DataFrame, *, id_col: str = "doc_id",
     base = docs.select(
         F.col(id_col),
         token_count_col(F.col(text_col)).alias("_ntok"),
-        rep_counts(F.col(text_col)).alias("_rc"))
+        rep_counts(F.col(text_col), F.lower(F.col(text_col)))
+        .alias("_rc"))
     out = base.select(id_col, "_ntok",
                       F.col("_rc._n_lines").alias("_n_lines"),
                       F.col("_rc._n_distinct").alias("_n_distinct"),

@@ -80,18 +80,10 @@ def exact_rep_rows(df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", *,
                    context: str = "near_dedup") -> DataFrame:
     """One representative ``(id, text)`` row per EXACT-duplicate group:
-    the min-(long id, string id) member per normalized fingerprint.
-
-    Why this exists (r7 review): identical texts have identical MinHash
-    signatures, so an m-copy boilerplate group collides in EVERY band
-    and the LSH self-join emits ~bands*m^2/2 candidate rows — a
-    quadratic blowup on content that exact dedup collapses to one row
-    in one shuffle (at 100 TB a million-copy template is ~10^13 join
-    rows). The near-dup chain therefore bands ONLY these
-    representatives; exact-duplicate members inherit the verdict
-    through ``is_dup`` (with_curation_flags) or by not being cluster
-    representatives (near_dedup). One groupBy on the 16-byte
-    fingerprint with map-side combine — the same shape as exact_dedup.
+    the min-(long id, string id) member per normalized fingerprint —
+    the rows :func:`near_dup_reps` bands (see there for why). One
+    groupBy on the 16-byte fingerprint with map-side combine — the same
+    shape as exact_dedup.
 
     The winner is picked in the LONG domain with the string id as
     tie-break — the SAME ordering the near path's exact-dup window
@@ -126,8 +118,8 @@ def shingle_udf(w: int = 3):
     :func:`with_minhash_signature_local` (the streaming signature
     projection) so both paths shingle bit-identically.
 
-    Why a pandas UDF and not the ``transform``/``slice`` column form
-    (kept below as ``shingle_col`` for short-text uses): higher-order
+    Why a pandas UDF and not a ``transform``/``slice`` column form
+    (which no pipeline uses, for this reason): higher-order
     functions are interpreted, and the optimizer's projection/Generate
     collapse re-inlines the tokenization subtree into the lambda and the
     generator — measured on the r3 skew-stress corpus as PER-ELEMENT
@@ -184,7 +176,7 @@ def with_minhash_signature_local(df: DataFrame, text_col: str = "text",
     (``aggregate`` + ``zip_with(least)`` over a per-element array of the
     k hashes — measured ~5x faster than k separate
     ``array_min(transform(...))`` passes, and safe from the
-    re-inlined-subtree trap ``shingle_col`` documents because the
+    re-inlined-subtree trap :func:`shingle_udf` documents because the
     shingles sit behind the UDF's Arrow boundary). The per-permutation
     salts are baked with ``F.lit(i)`` inside the comprehension — never a
     lambda default arg (the r4 (element, index) HOF-dispatch trap)."""
@@ -211,20 +203,6 @@ def with_minhash_signature_local(df: DataFrame, text_col: str = "text",
         lambda acc, x: F.zip_with(acc, x, lambda p, q: F.least(p, q)))
     return (staged.withColumn(out_col, sig)
                   .drop("_mhl_norm", "_mhl_shs"))
-
-
-def shingle_col(text: Column, w: int = 3) -> Column:
-    """Single-column shingle form — ONLY for short-text rows (tests,
-    oracle mirrors): the embedded tokenization re-evaluates per element
-    inside the interpreted lambda, which is quadratic in document length.
-    Pipelines use ``with_shingles``."""
-    toks = F.split(normalized_text(text), " ")
-    n = F.size(toks)
-    return F.array_distinct(
-        F.when(n >= w, F.transform(
-            F.sequence(F.lit(0), n - F.lit(w)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, F.lit(w)))))
-         .otherwise(F.array(normalized_text(text))))
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
@@ -473,31 +451,6 @@ def _fold_bit(h: Column, j: int) -> Column:
     return F.shiftright(half, j % 32).bitwiseAND(F.lit(1))
 
 
-def simhash_col(text: Column, bits: int = 64) -> Column:
-    """64-bit SimHash: per-bit majority over md5-fold token hashes.
-
-    bit_j(sig) = 1 iff sum over tokens of sign(bit_j(hash(tok))) > 0.
-    Unweighted tokens (weight extension: multiply the when() by a weight
-    column). Pure JVM expressions: 64 aggregate passes over the token
-    array per row — no shuffle, codegen-able.
-    """
-    toks = F.split(normalized_text(text), " ")
-    hashes = F.transform(toks, lambda t: _md5_fold(t))
-    def bit_sum(j: int) -> Column:
-        return F.aggregate(
-            hashes, F.lit(0),
-            lambda acc, h: acc + F.when(
-                _fold_bit(h, j) == 1, F.lit(1)).otherwise(F.lit(-1)))
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        # bit 63 is the two's-complement sign bit: 2**63 overflows a JVM
-        # long literal, but adding Long.MIN_VALUE sets the same bit
-        contrib = F.lit(-(2 ** 63)) if j == 63 else F.lit(2 ** j).cast("long")
-        out = out + F.when(bit_sum(j) > 0, contrib) \
-                     .otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash_udf():
     """Arrow-batched SimHash kernel over PRE-NORMALIZED text (exactly
     ``normalized_text``, computed JVM-side so the normalization pass the
@@ -576,10 +529,9 @@ def simhash_signatures_expr(df: DataFrame, text_col: str = "text",
 
     Tokens explode ONCE and hash ONCE; the 64 per-bit +/-1 contributions
     are narrow projections over that single hash column, and map-side
-    partial sums collapse before the shuffle. (The row-local
-    ``simhash_col`` variant re-evaluates the token-hash transform per bit
-    after projection collapse — measured ~10x slower again; kept for
-    single-row uses.)
+    partial sums collapse before the shuffle. (A row-local variant
+    re-evaluates the token-hash transform per bit after projection
+    collapse — measured ~10x slower again.)
     """
     # split staged into its own projection: Generate re-evaluates an
     # inline generator expression pathologically on huge strings (same
@@ -748,16 +700,53 @@ def cluster_pairs(pairs: DataFrame, nodes: DataFrame, *,
         "(component diameter exceeds max_iter — raise it)")
 
 
+def near_dup_reps(df: DataFrame, *, id_col: str, text_col: str,
+                  num_hashes: int, bands: int, jaccard_threshold: float,
+                  max_bucket: int | None, max_iter: int, context: str,
+                  stats: dict | None = None) -> DataFrame:
+    """The near-duplicate representatives chain, in ONE place:
+    exact-dup representatives (:func:`exact_rep_rows`) -> MinHash-LSH
+    candidates + exact shingle-Jaccard verify
+    (:func:`minhash_dedup_pairs`) -> transitive cluster closure
+    (:func:`cluster_pairs`). Returns ``(id_col, cluster_rep)`` over the
+    exact-dup representatives of ``df``; every consumer
+    (:func:`near_dedup`, ``curation.with_curation_flags`` and the
+    checkpointed ``plans.checkpoint._near_reps_stage``) builds its keep
+    decision from this frame. ``context`` names the caller in the
+    ``checked_long`` id errors; ``stats`` is the closure's round-count
+    hook.
+
+    Only EXACT-duplicate representatives are banded (r7): identical
+    texts have identical signatures, so an m-copy group collides in
+    EVERY band and used to emit ~bands*m^2/2 candidate rows that the
+    verify join then had to carry. The keep decision is unchanged: a
+    non-representative exact copy could never be its cluster's min-id
+    (its group's representative has a smaller (long, string) key), so
+    it was always dropped — now it simply never enters the closure, and
+    consumers drop it as an exact dup (``is_dup``) or by its absence
+    from the reps (not a cluster representative). Ids must be
+    losslessly long-castable (the closure's label domain;
+    ``checked_long`` fails fast otherwise)."""
+    rep_src = exact_rep_rows(df.select(id_col, text_col),
+                             text_col, id_col, context=context)
+    pairs = minhash_dedup_pairs(rep_src, text_col=text_col,
+                                id_col=id_col, num_hashes=num_hashes,
+                                bands=bands,
+                                jaccard_threshold=jaccard_threshold,
+                                max_bucket=max_bucket)
+    return cluster_pairs(pairs, rep_src.select(id_col), a_col="id_a",
+                         b_col="id_b", id_col=id_col,
+                         max_iter=max_iter, stats=stats)
+
+
 def near_dedup(df: DataFrame, *, text_col: str = "text",
                id_col: str = "doc_id",
                jaccard_threshold: float = 0.8,
                num_hashes: int = 64, bands: int = 16,
                max_iter: int = 50,
                max_bucket: int | None = 4096) -> DataFrame:
-    """One-call near-deduplication, the full production chain:
-    MinHash-LSH candidates -> exact shingle-Jaccard verify
-    (:func:`minhash_dedup_pairs`) -> transitive cluster closure
-    (:func:`cluster_pairs`) -> keep each cluster's min-id
+    """One-call near-deduplication, the full production chain
+    (:func:`near_dup_reps`) -> keep each cluster's min-id
     representative. Returns the SURVIVING rows of ``df`` (all columns),
     plus a ``cluster_rep`` column (== the row's own id, by
     construction) so callers can audit cluster sizes from the pair set
@@ -768,31 +757,16 @@ def near_dedup(df: DataFrame, *, text_col: str = "text",
     closure makes the keep-decision TRANSITIVE — without it, A~B and
     B~C with A!~C would keep both A and C's near-identical content.
 
-    r7: only EXACT-duplicate representatives are banded
-    (:func:`exact_rep_rows`) — identical texts band identically, so an
-    m-copy group used to emit ~bands*m^2/2 candidate rows that the
-    verify join then had to carry. The survivor set is unchanged: a
-    non-representative exact copy could never be its cluster's min-id
-    (its group's representative has a smaller (long, string) key), so
-    it was always dropped — now it simply never enters the closure.
-    Ids must be losslessly long-castable (the closure's label domain;
-    ``checked_long`` fails fast otherwise).
-
     ``max_bucket`` defaults ON here (4096) — this is the production
     surface, and NEAR-identical mega-groups (which exact_rep_rows cannot
     collapse) would otherwise make a band bucket quadratic; see
     :func:`minhash_lsh_candidates` for the star-join semantics and the
     recall tradeoff. Pass None for the exact all-pairs form.
     """
-    rep_src = exact_rep_rows(df.select(id_col, text_col),
-                             text_col, id_col, context="near_dedup")
-    pairs = minhash_dedup_pairs(rep_src, text_col=text_col,
-                                id_col=id_col, num_hashes=num_hashes,
-                                bands=bands,
-                                jaccard_threshold=jaccard_threshold,
-                                max_bucket=max_bucket)
-    reps = cluster_pairs(pairs, rep_src.select(id_col), a_col="id_a",
-                         b_col="id_b", id_col=id_col,
-                         max_iter=max_iter)
+    reps = near_dup_reps(df, id_col=id_col, text_col=text_col,
+                         num_hashes=num_hashes, bands=bands,
+                         jaccard_threshold=jaccard_threshold,
+                         max_bucket=max_bucket, max_iter=max_iter,
+                         context="near_dedup")
     keep = reps.filter(F.col(id_col) == F.col("cluster_rep"))
     return df.join(keep, id_col, "inner")

@@ -442,24 +442,22 @@ def _bucketize_stage(spark: SparkSession, in_path: str, out_path: str, *,
 
 def _near_reps_stage(spark: SparkSession, in_path: str, out_path: str,
                      *, log=print, **curate_kw):
-    """Stage 0 of the near-dedup resume protocol (VERDICT r6 #2): the
-    cluster closure labels GLOBALLY, so the per-bucket loop cannot
-    recompute it bucket-by-bucket — instead LSH pairs + closure run
-    ONCE over the whole input and the representatives table is written
-    under the same manifest protocol as the buckets (data write first,
-    atomic tmp+rename manifest after; a kill mid-stage leaves no
-    manifest and the stage re-runs from scratch). Resume skips straight
+    """Stage 0 of the near-dedup resume protocol (VERDICT r6 #2), for
+    the curation bucket loop and every ``run_prepare_stages
+    (near_dedup=True)`` export: the cluster closure labels GLOBALLY, so
+    the per-bucket loop cannot recompute it bucket-by-bucket — instead
+    ``dedup.near_dup_reps`` runs ONCE over the whole input and the
+    representatives table is written under the same manifest protocol
+    as the buckets (data write first, atomic tmp+rename manifest after;
+    a kill mid-stage leaves no manifest and the stage re-runs from
+    scratch). Resume skips straight
     to reading the written reps. Returns the reps DataFrame."""
     from pyspark.sql.observation import Observation
 
-    from documentai_spark.operators.dedup import (
-        cluster_pairs, exact_rep_rows, minhash_dedup_pairs,
-    )
+    from documentai_spark.operators.dedup import near_dup_reps
 
     reps_dir = os.path.join(out_path, NEAR_REPS_DIR)
     eff = _effective_curation_config(curate_kw)
-    id_col = eff["id_col"]
-    text_col = eff["text_col"]
     # the reps are only valid for the LSH parameters that built them —
     # record them and refuse a resume under different ones (r7 review:
     # silently reusing 0.7-threshold reps on a 0.9-threshold resume
@@ -480,22 +478,8 @@ def _near_reps_stage(spark: SparkSession, in_path: str, out_path: str,
             f"({prior['rows_out']} reps committed)")
         return spark.read.parquet(reps_dir)
     started = time.time()
-    src = spark.read.parquet(in_path)
-    # band only exact-dup representatives (r7 review, the same collapse
-    # as with_curation_flags' inline chain — the resumed flags stay
-    # byte-equal): members inherit through the per-bucket is_dup window
-    # and the coalesce in the reps join (absent rep row -> not near-dup)
-    rep_src = exact_rep_rows(src.select(id_col, text_col), text_col,
-                             id_col, context="near_reps_stage")
-    pairs = minhash_dedup_pairs(
-        rep_src, text_col=text_col, id_col=id_col,
-        num_hashes=eff["num_hashes"],
-        bands=eff["bands"],
-        jaccard_threshold=eff["jaccard_threshold"],
-        max_bucket=eff["max_bucket"])
-    reps = cluster_pairs(pairs, rep_src.select(id_col), a_col="id_a",
-                         b_col="id_b", id_col=id_col,
-                         max_iter=eff["max_iter"])
+    reps = near_dup_reps(spark.read.parquet(in_path),
+                         context="near_reps_stage", **config)
     obs = Observation("near_reps")
     (reps.observe(obs, F.count(F.lit(1)).alias("n"))
          .write.mode("overwrite").parquet(reps_dir))
@@ -631,8 +615,6 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
                        mixture_rates: dict[str, float] | None = None,
                        budget: int = 2048, pack_shards: int = 16,
                        seed: int = 42, resume: bool = False,
-                       max_stages: int | None = None,
-                       max_assign_splits: int | None = None,
                        lm_model: dict | None = None,
                        lm_threshold: float | None = None,
                        log=print) -> dict:
@@ -652,26 +634,19 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
       shards) -> partitioned assignment write; manifest stores the
       packing accounting and per-split sequence counts.
 
-    ``resume=True`` skips committed stages; with ``near_dedup`` the
-    global pairs+closure additionally stages through
-    :func:`_near_reps_stage` (so a crash mid-export resumes past the
-    LSH chain too). ``resume=False`` ignores existing manifests and
-    recomputes both stages (manifests are rewritten). The stage
-    manifests record the job CONFIG (splits/mixture/budget/seed/
-    near-dedup/benchmark identity/lm-threshold); resuming with a
-    different config
-    raises instead of silently mixing exports. Resume assumes the
-    input (and benchmark) tables are unchanged — the same contract as
-    every resume mode here.
-
-    ``max_stages`` limits how many of the two NAMED stages execute
-    this call (the kill-analog test hook; minimum 1 — the first
-    pending stage always executes); a partial run returns
-    ``incomplete: True``. ``max_assign_splits`` (r8) is the
-    finer-grained kill hook inside the assignment stage: at most that
-    many PENDING splits pack this call (completed splits still skip),
-    so the kill-mid-packing resume path is testable. Returns the
-    accounting line ``job.py --prepare`` prints.
+    With ``near_dedup`` the global pairs+closure always stages through
+    :func:`_near_reps_stage` (its own ``near-reps`` manifest) and the
+    corpus stage joins the written reps, so a crash mid-export resumes
+    past the LSH chain. ``resume`` only decides whether committed work
+    is skipped: ``resume=True`` skips committed stages (the reps stage
+    included); ``resume=False`` ignores existing manifests and
+    recomputes every stage (manifests are rewritten) through the same
+    plan. The stage manifests record the job CONFIG (splits/mixture/
+    budget/seed/near-dedup/benchmark identity/lm-threshold); resuming
+    with a different config raises instead of silently mixing exports.
+    Resume assumes the input (and benchmark) tables are unchanged — the
+    same contract as every resume mode here. Returns the accounting
+    line ``job.py --prepare`` prints.
     """
 
     from pyspark.sql.observation import Observation
@@ -680,11 +655,6 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
     from documentai_spark.plans.prepare import (
         pack_corpus, prepare_training_data,
     )
-
-    if max_stages is not None and max_stages < 1:
-        raise ValueError("max_stages must be >= 1: it bounds the two "
-                         "named stages and the first pending stage "
-                         "always executes")
 
     weights = split_weights or {"train": 0.9, "val": 0.05, "test": 0.05}
     # pack_shards is part of the config even though only the assignment
@@ -723,7 +693,6 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
         contaminated=benchmark is not None)
 
     t0 = time.time()
-    executed = 0
     skipped: list[str] = []
 
     # ---- stage 1: corpus ----
@@ -743,24 +712,19 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
         for _s in weights:
             _clear_stage_manifest(out_path,
                                   f"{PREPARE_ASSIGN_STAGE}-{_s}")
-        near_reps = None
         if not (near_dedup and resume):
-            # a corpus recompute on any path that does NOT stage through
-            # _near_reps_stage (resume=False runs the closure inline;
-            # near_dedup=False never runs it) must also invalidate a
-            # prior run's reps manifest — its config records only LSH
-            # parameters, nothing input-derived, so a later --resume
-            # would otherwise silently join representatives built from
-            # the OLD input (r7 review)
+            # a corpus recompute that may not reuse committed reps
+            # (resume=False recomputes them; near_dedup=False never
+            # builds them) must also invalidate a prior run's reps
+            # manifest — its config records only LSH parameters,
+            # nothing input-derived, so a later --resume would otherwise
+            # silently join representatives built from the OLD input
+            # (r7 review)
             _clear_stage_manifest(out_path, NEAR_REPS_STAGE)
-        if near_dedup and resume:
-            # the closure is the longest sub-stage — under resume it
-            # commits separately so a crash after it never re-runs the
-            # LSH chain (max_stages counts only the two named stages;
-            # a real kill between reps and corpus resumes past reps
-            # via its own manifest)
-            near_reps = _near_reps_stage(spark, in_path, out_path,
-                                         log=log)
+        # the closure is the longest sub-stage — it commits separately
+        # so a crash after it never re-runs the LSH chain
+        near_reps = (_near_reps_stage(spark, in_path, out_path, log=log)
+                     if near_dedup else None)
         obs_flags = Observation("prepare_flags")
 
         def observe_flags(df):
@@ -783,7 +747,6 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
         started = time.time()
         prep = prepare_training_data(
             spark.read.parquet(in_path), benchmark=benchmark,
-            near_dedup=near_dedup and near_reps is None,
             near_reps=near_reps, split_weights=weights,
             mixture_rates=mixture_rates, budget=budget,
             n_shards=pack_shards, seed=seed, observer=observe_flags,
@@ -805,13 +768,12 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
         _stage_commit(out_path, PREPARE_CORPUS_STAGE, config, started,
                       acc=acc, acc_c=acc_c,
                       bytes_out=_dir_bytes(corpus_path))
-        executed += 1
         log(f"[prepare] corpus stage: {acc_c['rows']} rows, "
             f"{round(time.time() - started, 1)}s")
 
     n_shards = auto_shards(pack_shards, acc_c["rows"])
 
-    def _line(acc_p: dict, seqs: dict, incomplete: bool = False) -> dict:
+    def _line(acc_p: dict, seqs: dict) -> dict:
         line = {
             "rows": acc["rows"], "kept": acc["kept"],
             "dropped": acc["rows"] - acc["surviving"],
@@ -835,8 +797,6 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
                 acc["surviving"] - sum(v[0] for v in by_src.values()),
                 acc_c["rows"] - sum(v[1] for v in by_src.values())]
             line["mixture_by_source"] = by_src
-        if incomplete:
-            line["incomplete"] = True
         return line
 
     # ---- stage 2: assignment (split-granular since r8) ----
@@ -855,8 +815,6 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
         skipped.append("assignment")
         log("[prepare] assignment stage: skipped")
         return _line(prior["acc_p"], prior["seqs"])
-    if max_stages is not None and executed >= max_stages:
-        return _line({"rows": 0, "oversize": 0}, {}, incomplete=True)
     started = time.time()
     acc_p = {"rows": 0, "oversize": 0}
     seqs: dict = {}
@@ -865,18 +823,12 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
         # per-split pack data (the corpus stage already invalidated
         # their manifests)
         shutil.rmtree(assign_path, ignore_errors=True)
-    packed_now = 0
     for s in sorted(weights):
         stage_s = f"{PREPARE_ASSIGN_STAGE}-{s}"
         pm = guard(stage_s)
         if pm:
             log(f"[prepare] assignment split {s!r}: skipped "
                 f"({pm['acc_p']['rows']} docs committed)")
-        elif max_assign_splits is not None \
-                and packed_now >= max_assign_splits:
-            # kill-analog hook: some splits committed, the rest (and
-            # the aggregate manifest) pending — a resume finishes them
-            return _line(acc_p, seqs, incomplete=True)
         else:
             s_started = time.time()
             split_rows = acc_c.get(f"split_{s}", 0)
@@ -908,7 +860,6 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
                          .select("shard", "bin").distinct().count())
             pm = _stage_commit(out_path, stage_s, config, s_started,
                                acc_p=p_acc, n_sequences=n_seq)
-            packed_now += 1
             log(f"[prepare] assignment split {s!r}: {p_acc['rows']} "
                 f"docs packed, {round(time.time() - s_started, 1)}s")
         for k in acc_p:

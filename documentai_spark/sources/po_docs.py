@@ -66,17 +66,3 @@ def gen_po_text(doc_id: int, seed: int = 23) -> str:
         lines.append(f"{inco} {places[h('pl') % 3]}{suffix}")
     return "\n".join(lines)
 
-
-def write_po_docs_parquet(path: str, n_docs: int = 240,
-                          seed: int = 23) -> int:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    ids = list(range(n_docs))
-    texts = [gen_po_text(i, seed) for i in ids]
-    table = pa.table({"doc_id": pa.array(ids, pa.int64()),
-                      "text": pa.array(texts, pa.string())})
-    import os
-    os.makedirs(path, exist_ok=True)
-    pq.write_table(table, f"{path}/part-0.parquet")
-    return n_docs

@@ -102,10 +102,11 @@ def main() -> None:
                          "cluster-closure near-dup chain; "
                          "non-representative near-duplicates are "
                          "dropped and accounted separately (near_dup) "
-                         "from exact fingerprint dups. With --curate "
-                         "--resume the global pairs+closure stage runs "
-                         "ONCE under its own checkpoint manifest and "
-                         "each bucket joins the written reps table")
+                         "from exact fingerprint dups. With --prepare "
+                         "or --curate --resume the global "
+                         "pairs+closure stage runs ONCE under its own "
+                         "checkpoint manifest and the curation joins "
+                         "the written reps table")
     ap.add_argument("--lm-threshold", type=float, default=None,
                     metavar="DIGITS",
                     help="with --curate (non-resume), --stream-curate, "
@@ -122,11 +123,12 @@ def main() -> None:
                          "-> mixture] -> split -> per-split sequence "
                          "packing, writes <output>/corpus and "
                          "<output>/assignment partitioned by split, and "
-                         "prints the full drop accounting (combines "
-                         "with --near-dedup; with --resume both stages "
-                         "— and the near-dedup reps stage — commit "
-                         "under checkpoint manifests and committed "
-                         "stages are skipped on re-run)")
+                         "prints the full drop accounting. Every stage "
+                         "commits under a checkpoint manifest — with "
+                         "--near-dedup the global pairs+closure too "
+                         "(_checkpoints/stage-near-reps.json); with "
+                         "--resume committed stages are skipped on "
+                         "re-run")
     ap.add_argument("--benchmark", default=None, metavar="PARQUET_DIR",
                     help="with --prepare: eval-set parquet whose 8-gram "
                          "overlaps disqualify training documents")
@@ -424,7 +426,7 @@ def main() -> None:
     if args.prepare:
         # the two-stage export body lives in plans.checkpoint as
         # manifest-committed stages (r7) so --prepare --resume skips
-        # committed work; resume=False recomputes both stages
+        # committed work; resume=False recomputes every stage
         from documentai_spark.plans.checkpoint import run_prepare_stages
 
         def _rates(spec: str) -> dict[str, float]:

@@ -239,9 +239,29 @@ def test_near_dedup_checkpoint_resume_byte_equals_single_run(spark,
                                   log=lambda *_: None, **kw)
 
 
-def test_prepare_stage_resume(spark, tmp_path):
+def _crash_pack_after(monkeypatch, n_ok: int) -> None:
+    """Make ``plans.prepare.pack_corpus`` raise on its call number
+    ``n_ok + 1``: the prepare corpus stage calls it once while building
+    its plan (before the corpus write), then the assignment stage once
+    per non-empty split, in sorted split order."""
+    import documentai_spark.plans.prepare as prep_mod
+
+    real = prep_mod.pack_corpus
+    calls = []
+
+    def pack(*a, **k):
+        calls.append(1)
+        if len(calls) > n_ok:
+            raise RuntimeError("killed")
+        return real(*a, **k)
+
+    monkeypatch.setattr(prep_mod, "pack_corpus", pack)
+
+
+def test_prepare_stage_resume(spark, tmp_path, monkeypatch):
     """r7: the --prepare export body is manifest-committed stages. A
-    kill after stage 1 (max_stages hook) resumes into stage 2 only;
+    crash after stage 1 (the first assignment pack raises) resumes
+    into stage 2 only;
     a fully-committed export resumes as a pure report replay (both
     stages skipped, line equals the original); a config change on
     resume refuses; resume=False recomputes ignoring manifests."""
@@ -257,10 +277,11 @@ def test_prepare_stage_resume(spark, tmp_path):
     out = str(tmp_path / "prep_out")
     kw = dict(budget=120, pack_shards=4, log=lambda *_: None)
 
-    # kill analog: stage 1 commits, stage 2 never runs
-    r1 = run_prepare_stages(spark, in_dir, out, resume=True,
-                            max_stages=1, **kw)
-    assert r1["incomplete"] and r1["stages_skipped"] == []
+    # crash: stage 1 commits, stage 2 dies at its first pack
+    _crash_pack_after(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_prepare_stages(spark, in_dir, out, resume=True, **kw)
+    monkeypatch.undo()
     assert read_stage_manifest(out, "prepare-corpus")["status"] == "done"
     assert read_stage_manifest(out, "prepare-assignment") is None
 
@@ -300,9 +321,10 @@ def test_prepare_stage_resume(spark, tmp_path):
     assert read_stage_manifest(out, "prepare-assignment")["finished"] > before
 
 
-def test_prepare_assignment_split_granular_resume(spark, tmp_path):
+def test_prepare_assignment_split_granular_resume(spark, tmp_path,
+                                                  monkeypatch):
     """r8 (VERDICT r7 #5): the assignment stage commits per SPLIT — a
-    kill mid-packing (max_assign_splits hook) resumes past the
+    crash mid-packing (the second split's pack raises) resumes past the
     completed splits' packs instead of re-running the whole
     assignment, and the resumed export's corpus + assignment row sets
     equal a single-run export's exactly (packing is deterministic per
@@ -317,10 +339,11 @@ def test_prepare_assignment_split_granular_resume(spark, tmp_path):
     out = str(tmp_path / "sg_out")
     kw = dict(budget=120, pack_shards=4, log=lambda *_: None)
 
-    # kill analog: corpus commits, then only ONE split packs
-    r1 = run_prepare_stages(spark, in_dir, out, resume=True,
-                            max_assign_splits=1, **kw)
-    assert r1["incomplete"]
+    # crash: corpus commits, then only ONE split packs
+    _crash_pack_after(monkeypatch, 2)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_prepare_stages(spark, in_dir, out, resume=True, **kw)
+    monkeypatch.undo()
     done = [s for s in ("test", "train", "val") if read_stage_manifest(
         out, f"prepare-assignment-{s}")]
     assert len(done) == 1, done
@@ -432,14 +455,51 @@ def test_prepare_stage_resume_with_near_dedup_reps(spark, tmp_path):
     assert r["by_reason"]["near_dup"] == ref["by_reason"]["near_dup"]
 
 
+def test_prepare_near_dedup_reps_reused_after_crash(spark, tmp_path,
+                                                    monkeypatch):
+    """Every --prepare --near-dedup export stages the closure, resumed
+    or not: a resume=False run that crashes inside the corpus stage has
+    already committed the near-reps stage, and a --resume run then
+    skips it (same manifest) and matches a clean export's accounting."""
+    from documentai_spark.plans.checkpoint import (
+        read_stage_manifest, run_prepare_stages,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    in_dir = str(tmp_path / "rc_in")
+    docs.write.parquet(in_dir)
+    out = str(tmp_path / "rc_out")
+    kw = dict(near_dedup=True, budget=120, pack_shards=4,
+              log=lambda *_: None)
+
+    # crash before the corpus write (the corpus plan's pack call)
+    _crash_pack_after(monkeypatch, 0)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_prepare_stages(spark, in_dir, out, resume=False, **kw)
+    monkeypatch.undo()
+    rep_m = read_stage_manifest(out, "near-reps")
+    assert rep_m["status"] == "done"
+    assert read_stage_manifest(out, "prepare-corpus") is None
+
+    r = run_prepare_stages(spark, in_dir, out, resume=True, **kw)
+    assert read_stage_manifest(out, "near-reps")["finished"] == \
+        rep_m["finished"]
+    assert r["stages_skipped"] == []
+
+    ref = run_prepare_stages(spark, in_dir, str(tmp_path / "rc_ref"),
+                             resume=False, **kw)
+    for k in ("rows", "kept", "dropped", "by_reason", "splits",
+              "packed_docs", "oversize", "sequences"):
+        assert r[k] == ref[k], k
+
+
 def test_prepare_recompute_invalidates_manifests_first(spark, tmp_path,
                                                        monkeypatch):
     """r7 review: a resume=False recompute (or any stage re-execution)
     must remove the prior 'done' manifests BEFORE touching data — a
     crash mid-recompute otherwise leaves a stale manifest standing over
     half-overwritten output, and a later --resume would serve the
-    corruption. Also: max_stages=0 is rejected (the first pending stage
-    always executes)."""
+    corruption."""
     import pytest
 
     import documentai_spark.plans.prepare as prep_mod
@@ -473,10 +533,6 @@ def test_prepare_recompute_invalidates_manifests_first(spark, tmp_path,
     assert read_stage_manifest(out, "prepare-corpus") is None
     assert read_stage_manifest(out, "prepare-assignment") is None
     assert read_stage_manifest(out, "near-reps") is None
-
-    with pytest.raises(ValueError, match="max_stages"):
-        run_prepare_stages(spark, in_dir, out, resume=True,
-                           max_stages=0, **kw)
 
 
 def test_near_reps_stage_config_mismatch_refuses(spark, tmp_path):
@@ -652,7 +708,8 @@ def test_manifest_wrong_shape_json_reads_as_pending(tmp_path, kind):
     assert read_stage_manifest(out, "ok") == ok
 
 
-def test_prepare_manifest_without_lm_threshold_resumes(spark, tmp_path):
+def test_prepare_manifest_without_lm_threshold_resumes(spark, tmp_path,
+                                                       monkeypatch):
     """A prepare-corpus manifest committed before the lm_threshold config
     key existed (pre-r8) was committed without an LM filter: it must
     resume under lm_threshold=None instead of refusing."""
@@ -666,7 +723,10 @@ def test_prepare_manifest_without_lm_threshold_resumes(spark, tmp_path):
     docs.write.parquet(in_dir)
     out = str(tmp_path / "pre_r8_out")
     kw = dict(budget=120, pack_shards=4, log=lambda *_: None)
-    run_prepare_stages(spark, in_dir, out, resume=True, max_stages=1, **kw)
+    _crash_pack_after(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_prepare_stages(spark, in_dir, out, resume=True, **kw)
+    monkeypatch.undo()
     path = os.path.join(out, "_checkpoints", "stage-prepare-corpus.json")
     rec = json.load(open(path))
     del rec["config"]["lm_threshold"]

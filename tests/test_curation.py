@@ -394,7 +394,8 @@ def test_rep_signals_udf_matches_expr(spark):
     (integer counters AND the JVM-rounded ratios) on adversarial docs:
     nulls, control-char whitespace (\\x1c splits ml tokens but not
     token_count's class), tab-led lines (JVM trim strips only spaces),
-    unicode/astral char counting, and heavy duplication."""
+    unicode/astral char counting, heavy duplication, and mixed case
+    (bigrams count over lowered tokens, lines over raw text)."""
     from documentai_spark.operators.curation import (
         repetition_signals, repetition_signals_expr,
     )
@@ -408,6 +409,7 @@ def test_rep_signals_udf_matches_expr(spark):
         (7, "é line\né line\n\U0001d11e astral chars here"),
         (8, ("loop " * 300).strip()),
         (9, "one"),                              # <2 tokens, no bigram
+        (10, "Ha ha Ha ha Ha ha"),               # bigrams on lowered text
     ], "doc_id long, text string")
     fast = {r.doc_id: r.asDict()
             for r in repetition_signals(docs).collect()}
