@@ -17,11 +17,15 @@ shuffle for the min-window, everything else map-side.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from documentai_spark.core.textstats import STOPWORDS
+from documentai_spark.operators.dedup import fingerprint_col
 
 
 # Pinned token whitespace: Java's \s set [ \t\n\x0b\f\r], SPELLED OUT
@@ -59,12 +63,6 @@ def stopword_ratio_col(text: Column) -> Column:
                                     F.lit(STOPWORD_PATTERN), F.lit(0))),
         F.lit(0))
     return F.round(n_sw / F.greatest(token_count_col(text), F.lit(1)), 6)
-
-
-def fingerprint_col(text: Column) -> Column:
-    """Normalized md5 (doc_fingerprint formulation; Java \\s ==
-    [ \\t\\n\\x0b\\f\\r], mirrored by the oracle's explicit class)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
 
 
 def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
@@ -196,18 +194,35 @@ def with_curation_flags(df: DataFrame, *, id_col: str = "doc_id",
         min_stopword_ratio=min_stopword_ratio)
 
 
+# The drop reasons in report order, each with its audit flag column —
+# the one table behind both the keep rule and its accounting. Every
+# reason folds into ``keep`` except ``contaminated``, which is counted
+# only (the prepare export filters on it after the keep rule).
+KEEP_REASONS = (("dup", "is_dup"), ("near_dup", "is_near_dup"),
+                ("bad_lang", "bad_lang"), ("bad_len", "bad_len"),
+                ("low_conf", "low_conf"),
+                ("high_perplexity", "high_perplexity"))
+DROP_REASONS = KEEP_REASONS + (("contaminated", "contaminated"),)
+
+
 def with_stateless_flags(df: DataFrame, *, text_col: str = "text",
                          confidence_col: str = "confidence",
                          min_tokens: int = 20, max_tokens: int = 2000,
                          min_confidence: float = 0.6,
                          min_stopword_ratio: float = 0.04) -> DataFrame:
     """The row-local half of the curation decision: bad_lang / bad_len /
-    low_conf and the combined ``keep``, folding in an ``is_dup`` column
-    if the caller already computed one (the batch window or the streaming
-    stateful dedup; absent -> treated as not-a-dup).
+    low_conf and the ONE ``keep`` rule: a row is kept iff no flag of
+    :data:`KEEP_REASONS` present in the frame is set. Flags a
+    caller computed upstream fold in when present — ``is_dup`` (the
+    batch window; absent -> added as not-a-dup, the streaming stateful
+    dedup drops duplicates instead of flagging them), ``is_near_dup``
+    (the near-dup chain) and ``high_perplexity`` (``with_lm_perplexity``
+    with a threshold, run before this) — so the default schemas stay
+    unchanged.
 
     This is the streamable piece — no window, no shuffle — shared by
-    the batch ``with_curation_flags`` and ``streaming_curate``.
+    the batch ``with_curation_flags`` and both streaming curation
+    drivers.
 
     A NULL confidence reads as ``low_conf`` (r7 review): the comparison
     alone would make keep NULL and the row would vanish with every
@@ -228,19 +243,25 @@ def with_stateless_flags(df: DataFrame, *, text_col: str = "text",
                              F.lit(True))))
     if "is_dup" not in df.columns:
         out = out.withColumn("is_dup", F.lit(False))
-    keep = ~(F.col("is_dup") | F.col("bad_lang") | F.col("bad_len")
-             | F.col("low_conf"))
-    if "is_near_dup" in df.columns:
-        # present only when the caller ran the near-dup chain
-        # (with_curation_flags(near_dedup=True)) — folded, not created,
-        # so the batch/streaming default schemas stay unchanged
-        keep = keep & ~F.col("is_near_dup")
-    if "high_perplexity" in df.columns:
-        # present only when the caller ran with_lm_perplexity with a
-        # threshold (streaming_curate/near_curate_finish lm_threshold=,
-        # job.py --lm-threshold) — same fold-if-present contract
-        keep = keep & ~F.col("high_perplexity")
-    return out.withColumn("keep", keep)
+    flags = [F.col(c) for _, c in KEEP_REASONS if c in out.columns]
+    return out.withColumn("keep", ~reduce(operator.or_, flags))
+
+
+def drop_accounting(columns) -> list[Column]:
+    """The Observation metrics of the drop accounting every curation
+    driver reports: ``rows``, ``kept``, then one flag sum per reason of
+    :data:`DROP_REASONS` whose flag is among ``columns`` (the same
+    present-in-the-frame rule the ``keep`` fold uses)."""
+    return [F.count(F.lit(1)).alias("rows"),
+            F.sum(F.col("keep").cast("int")).alias("kept")] + [
+        F.sum(F.col(c).cast("int")).alias(r)
+        for r, c in DROP_REASONS if c in columns]
+
+
+def by_reason(acc: dict) -> dict:
+    """The per-reason drop counts of an accounting record, in report
+    order."""
+    return {r: acc[r] for r, _ in DROP_REASONS if r in acc}
 
 
 def corpus_report(docs: DataFrame, *, text_col: str = "text",

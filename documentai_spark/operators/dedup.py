@@ -343,6 +343,16 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
                  .agg(F.count(F.lit(1)).alias("n_bands_matched")))
 
 
+def shingle_jaccard(a: str, b: str) -> Column:
+    """True Jaccard of two shingle-array columns, rounded to 6 dp (two
+    empty sets score 1.0) — the verify formula of the batch LSH chain
+    and of the streaming exact re-verify."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(1.0)),
+                   6)
+
+
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", num_hashes: int = 64,
                         bands: int = 16,
@@ -380,10 +390,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                          F.col("_sh").alias("_sha")), "id_a")
          .join(sh.select(F.col(id_col).alias("id_b"),
                          F.col("_sh").alias("_shb")), "id_b"))
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = F.size("_sha") + F.size("_shb") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
-    return (j.withColumn("jaccard", F.round(jac, 6))
+    return (j.withColumn("jaccard", shingle_jaccard("_sha", "_shb"))
              .filter(F.col("jaccard") >= jaccard_threshold)
              .select("id_a", "id_b", "jaccard"))
 

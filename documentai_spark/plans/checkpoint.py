@@ -205,14 +205,14 @@ def _committed_buckets(out_path: str, config: dict,
 
 
 def _run_buckets(out_path: str, done: dict[int, dict], config: dict,
-                 bucket_job, *, n_buckets: int, max_buckets: int | None,
-                 counts: tuple[str, ...] = (), line: str,
-                 log) -> dict:
+                 bucket_job, *, n_buckets: int,
+                 max_buckets: int | None = None,
+                 counts: tuple[str, ...] = (), line: str, log) -> dict:
     """The bucket loop shared by both checkpointed drivers: skip buckets
     whose manifest says ``done``, process at most ``max_buckets`` pending
-    ones, write each into its own ``bucket=K`` directory (overwrite, so
-    re-running a bucket replaces it wholly) and commit its manifest
-    AFTER the data write.
+    ones (``run_checkpointed``'s kill hook), write each into its own
+    ``bucket=K`` directory (overwrite, so re-running a bucket replaces
+    it wholly) and commit its manifest AFTER the data write.
 
     ``bucket_job(bucket)`` returns ``(df, lineage)``: the bucket's
     output DataFrame with its Observations attached, and a callable
@@ -246,7 +246,6 @@ def _run_buckets(out_path: str, done: dict[int, dict], config: dict,
             stats[k] += rec.get(k, 0)
     # a max_buckets-limited run must be distinguishable from a complete
     # one — its aggregate counts cover only the processed+skipped subset
-    # (run_prepare_stages marks partial runs the same way)
     pending = n_buckets - stats["buckets_done"] - stats["buckets_skipped"]
     if pending > 0:
         stats["buckets_pending"] = pending
@@ -328,27 +327,6 @@ def zero_nulls(metrics) -> dict:
     return {k: (0 if v is None else v) for k, v in dict(metrics).items()}
 
 
-def drop_accounting(*, near_dedup: bool, lm: bool,
-                    contaminated: bool = False):
-    """The drop reasons in report order and their Observation metrics
-    (``rows``, ``kept``, then one flag sum per reason) — the accounting
-    ``job.py --curate`` and the prepare corpus stage both print. Returns
-    ``(reasons, metrics)``."""
-    reasons = ["dup", "bad_lang", "bad_len", "low_conf"]
-    if near_dedup:
-        reasons.insert(1, "near_dup")
-    if lm:
-        reasons.append("high_perplexity")
-    if contaminated:
-        reasons.append("contaminated")
-    flag_col = {"dup": "is_dup", "near_dup": "is_near_dup"}
-    metrics = [F.count(F.lit(1)).alias("rows"),
-               F.sum(F.col("keep").cast("int")).alias("kept")] + [
-        F.sum(F.col(flag_col.get(r, r)).cast("int")).alias(r)
-        for r in reasons]
-    return reasons, metrics
-
-
 def _effective_curation_config(curate_kw: dict) -> dict:
     """``curate_kw`` with with_curation_flags' scalar defaults baked in,
     sorted — so the manifests' 'same configuration' test compares
@@ -403,7 +381,7 @@ def _bucketize_stage(spark: SparkSession, in_path: str, out_path: str, *,
     parquet — the caller falls back to filtering the, empty, input)."""
     from pyspark.sql.observation import Observation
 
-    from documentai_spark.operators.curation import fingerprint_col
+    from documentai_spark.operators.dedup import fingerprint_col
 
     staged = os.path.join(out_path, STAGED_DIR)
     config = {"n_buckets": n_buckets, "text_col": text_col}
@@ -494,7 +472,6 @@ def _near_reps_stage(spark: SparkSession, in_path: str, out_path: str,
 def run_checkpointed_curation(spark: SparkSession, in_path: str,
                               out_path: str, *, n_buckets: int = 16,
                               near_dedup: bool = False,
-                              max_buckets: int | None = None,
                               log=print, **curate_kw) -> dict:
     """Checkpointed corpus curation over a documents table.
 
@@ -520,7 +497,9 @@ def run_checkpointed_curation(spark: SparkSession, in_path: str,
     """
     from pyspark.sql.observation import Observation
 
-    from documentai_spark.operators.curation import curate_documents
+    from documentai_spark.operators.curation import (
+        curate_documents, drop_accounting,
+    )
 
     # committed keep decisions are only resumable under the SAME flag
     # mode (the schemas differ) and thresholds. Defaults are baked in
@@ -560,22 +539,17 @@ def run_checkpointed_curation(spark: SparkSession, in_path: str,
         part = src.filter(F.col("bucket") == bucket).drop("bucket")
         obs = Observation(f"cur_{bucket}")
         out = curate_documents(part, near_reps=reps, **curate_kw)
-        metrics = [F.count(F.lit(1)).alias("n"),
-                   F.sum(F.col("keep").cast("long")).alias("kept")]
-        if near_dedup:
-            metrics.append(F.sum(F.col("is_near_dup").cast("long"))
-                           .alias("near_dup"))
 
         def lineage():
             acc = zero_nulls(obs.get)
-            return {"rows_in": acc["n"], "rows_out": acc["n"],
+            return {"rows_in": acc["rows"], "rows_out": acc["rows"],
                     "near_dedup": near_dedup,
                     **{k: acc[k] for k in counts}}
-        return out.observe(obs, *metrics), lineage
+        return out.observe(obs, *drop_accounting(out.columns)), lineage
 
     return _run_buckets(
         out_path, done, config, bucket_job, n_buckets=n_buckets,
-        max_buckets=max_buckets, counts=counts, log=log,
+        counts=counts, log=log,
         line="[curate-checkpoint] bucket {partition}/{n_buckets}: "
              "{rows_out} rows ({kept} kept), {wall_sec}s")
 
@@ -651,6 +625,9 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
 
     from pyspark.sql.observation import Observation
 
+    from documentai_spark.operators.curation import (
+        by_reason, drop_accounting,
+    )
     from documentai_spark.operators.packing import auto_shards
     from documentai_spark.plans.prepare import (
         pack_corpus, prepare_training_data,
@@ -688,9 +665,6 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
 
     corpus_path = os.path.join(out_path, "corpus")
     assign_path = os.path.join(out_path, "assignment")
-    reasons, flag_metrics = drop_accounting(
-        near_dedup=near_dedup, lm=lm_threshold is not None,
-        contaminated=benchmark is not None)
 
     t0 = time.time()
     skipped: list[str] = []
@@ -731,7 +705,7 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
             surviving = F.col("keep")
             if benchmark is not None:
                 surviving = surviving & ~F.col("contaminated")
-            metrics = list(flag_metrics)
+            metrics = drop_accounting(df.columns)
             metrics.insert(2, F.sum(surviving.cast("int"))
                            .alias("surviving"))
             if mixture_rates:
@@ -777,7 +751,7 @@ def run_prepare_stages(spark: SparkSession, in_path: str, out_path: str,
         line = {
             "rows": acc["rows"], "kept": acc["kept"],
             "dropped": acc["rows"] - acc["surviving"],
-            "by_reason": {k: acc[k] for k in reasons},
+            "by_reason": by_reason(acc),
             "mixture_dropped": acc["surviving"] - acc_c["rows"],
             "splits": {s: acc_c[f"split_{s}"] for s in weights},
             "packed_docs": acc_p["rows"], "oversize": acc_p["oversize"],

@@ -5,7 +5,9 @@ The r5 curation operators are each gate-checked in isolation; this
 module chains them into the export surface (the same move that wired
 ``near_dedup`` into ``--curate``):
 
-    curate_documents  (quality flags + exact [+ near] dedup)
+    with_lm_perplexity (optional frozen-LM score)
+      -> curate_documents (quality flags + exact [+ near] dedup; one
+                           keep rule folds every flag)
       -> decontaminate (optional benchmark n-gram sweep)
       -> keep-filter   (keep & ~contaminated)
       -> mixture_sample (optional per-source rate thinning)
@@ -97,22 +99,20 @@ def prepare_training_data(docs: DataFrame, *,
     fully-flagged table before the keep-filter — the job mode attaches
     an ``Observation`` here so drop accounting rides the corpus write
     itself (single pass, no output re-read, single-counted).
-    ``lm_model`` + ``lm_threshold`` (r8): also score under the frozen
-    bigram LM (``curation.with_lm_perplexity``, stateless map-side) and
-    fold ``high_perplexity`` into ``keep`` before the keep-filter —
-    the same composition as ``--curate --lm-threshold``.
+    ``lm_model`` + ``lm_threshold`` (r8): also score the documents
+    under the frozen bigram LM (``curation.with_lm_perplexity``,
+    stateless map-side) BEFORE the curation flags, so the one keep rule
+    (``curation.with_stateless_flags``) folds ``high_perplexity`` into
+    ``keep`` — the same composition as ``--curate --lm-threshold``.
     ``curation_kw``: forwarded to ``with_curation_flags`` (thresholds,
     LSH parameters).
     """
+    if lm_model is not None and lm_threshold is not None:
+        docs = with_lm_perplexity(docs, lm_model, text_col=text_col,
+                                  threshold=lm_threshold)
     flagged = curate_documents(docs, near_dedup=near_dedup,
                                id_col=id_col, text_col=text_col,
                                **curation_kw)
-    if lm_model is not None and lm_threshold is not None:
-        flagged = with_lm_perplexity(flagged, lm_model,
-                                     text_col=text_col,
-                                     threshold=lm_threshold)
-        flagged = flagged.withColumn(
-            "keep", F.col("keep") & ~F.col("high_perplexity"))
     if benchmark is not None:
         flagged = decontaminate(flagged, benchmark, text_col=text_col,
                                 id_col=id_col)

@@ -54,6 +54,7 @@ re-admits — the windowed-dedup tradeoff.
 
 from __future__ import annotations
 
+import functools
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -66,7 +67,9 @@ from documentai_spark.functions.ids import checked_long
 from documentai_spark.operators.dedup import (
     band_structs, with_minhash_signature_local,
 )
-from documentai_spark.streaming.pipeline import _event_ms, _interval_ms
+from documentai_spark.streaming.pipeline import (
+    _interval_ms, curation_tail,
+)
 
 
 def streaming_near_dup_verdicts(stream: DataFrame, *,
@@ -431,7 +434,9 @@ def exact_verify_flags(out: DataFrame, out_path: str, batch_id: int, *,
     """
     import os
 
-    from documentai_spark.operators.dedup import with_shingles
+    from documentai_spark.operators.dedup import (
+        shingle_jaccard, with_shingles,
+    )
 
     spark = out.sparkSession
     flagged = out.filter(F.col("is_near_dup"))
@@ -456,14 +461,11 @@ def exact_verify_flags(out: DataFrame, out_path: str, batch_id: int, *,
     f_sh = with_shingles(flagged.select(id_col, text_col), text_col,
                          "_sh_doc", id_col, w)
     r_sh = with_shingles(reps, "_rep_text", "_sh_rep", id_col, w)
-    inter = F.size(F.array_intersect("_sh_doc", "_sh_rep"))
-    union = F.size("_sh_doc") + F.size("_sh_rep") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
     demoted = (flagged.select(F.col(id_col), F.col("near_rep"))
                .join(f_sh, id_col)
                .join(r_sh.select(F.col(id_col).alias("near_rep"),
                                  "_sh_rep"), "near_rep")
-               .filter(F.round(jac, 6) < threshold)
+               .filter(shingle_jaccard("_sh_doc", "_sh_rep") < threshold)
                .select(id_col, F.lit(True).alias("_demote")))
     return (out.join(demoted, id_col, "left")
                .withColumn("is_near_dup",
@@ -587,35 +589,18 @@ def near_curate_finish(text_col: str = "text",
                        lm_model: dict | None = None,
                        lm_threshold: float | None = None,
                        **flag_kw) -> Callable[[DataFrame], DataFrame]:
-    """``finish`` factory for the curation composition: extraction +
-    quality + verdict + the row-local curation flags over the
-    recombined survivors — all stateless, so it runs in the batch
-    domain of the sink. ``with_stateless_flags`` folds the
-    ``is_near_dup`` column into ``keep`` (flagged docs are dropped from
-    the kept corpus but stay in the output for accounting), matching
-    the batch ``with_curation_flags(near_dedup=True)`` semantics.
-    ``flag_kw`` forwards thresholds (min_tokens / max_tokens /
-    min_confidence / min_stopword_ratio). ``lm_model`` +
-    ``lm_threshold`` (r8): also score under the frozen bigram LM and
-    fold ``high_perplexity`` into ``keep`` (stateless, so it runs in
-    the same batch domain; the ``streaming_curate`` twin).
+    """``finish`` factory for the curation composition: the stateless
+    ``streaming_curate`` tail (``streaming.pipeline.curation_tail``:
+    extraction + quality + verdict [+ frozen-LM score] + the row-local
+    curation flags) over the recombined survivors, in the batch domain
+    of the sink. Its keep rule folds ``is_near_dup`` (flagged docs are
+    dropped from the kept corpus but stay in the output for
+    accounting), matching the batch ``with_curation_flags(
+    near_dedup=True)`` semantics, and ``high_perplexity`` when
+    ``lm_model`` + ``lm_threshold`` are given. ``flag_kw`` forwards
+    thresholds (min_tokens / max_tokens / min_confidence /
+    min_stopword_ratio).
     """
-    from documentai_spark.functions.verdict import with_verdict
-    from documentai_spark.operators.curation import (
-        with_lm_perplexity, with_stateless_flags,
-    )
-    from documentai_spark.operators.extraction import (
-        with_extraction_and_quality,
-    )
-
-    def _finish(df: DataFrame) -> DataFrame:
-        extracted = with_verdict(
-            with_extraction_and_quality(df, text_col=text_col))
-        if lm_model is not None and lm_threshold is not None:
-            extracted = with_lm_perplexity(extracted, lm_model,
-                                           text_col=text_col,
-                                           threshold=lm_threshold)
-        return with_stateless_flags(extracted, text_col=text_col,
-                                    **flag_kw)
-
-    return _finish
+    return functools.partial(curation_tail, text_col=text_col,
+                             lm_model=lm_model, lm_threshold=lm_threshold,
+                             **flag_kw)

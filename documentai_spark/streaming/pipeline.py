@@ -18,9 +18,7 @@ from pyspark.sql import functions as F
 
 from documentai_spark.functions.verdict import with_verdict
 from documentai_spark.operators.extraction import with_extraction_and_quality
-
-TRANSCRIPT_DDL = ("conv_id string, turn_idx int, role string, "
-                  "text string, tool string, ts timestamp")
+from documentai_spark.plans.pipeline import TRANSCRIPT_DDL
 
 _INTERVAL_UNITS = {
     "millisecond": 1, "milliseconds": 1, "ms": 1,
@@ -357,15 +355,8 @@ def streaming_curate(stream: DataFrame,
     (min_tokens / max_tokens / min_confidence / min_stopword_ratio).
 
     ``lm_model`` + ``lm_threshold`` (r8): also score survivors under
-    the frozen bigram LM (``curation.with_lm_perplexity`` — stateless,
-    pure map-side, so it streams as-is) and fold ``high_perplexity``
-    into ``keep`` (``with_stateless_flags``' fold-if-present contract,
-    same as the batch ``--curate --lm-threshold`` composition).
+    the frozen bigram LM (see :func:`curation_tail`).
     """
-    from documentai_spark.operators.curation import (
-        with_lm_perplexity, with_stateless_flags,
-    )
-
     survivors = streaming_first_wins_dedup(
         stream, text_col=text_col, id_cols=id_cols, ttl=ttl,
         ts_col=ts_col, watermark=watermark)
@@ -378,13 +369,33 @@ def streaming_curate(stream: DataFrame,
     # constant-fold it away nor push it below the state op, and
     # always-true so it drops nothing.
     survivors = survivors.filter(F.spark_partition_id() >= 0)
-    extracted = with_verdict(
-        with_extraction_and_quality(survivors, text_col=text_col))
+    return curation_tail(survivors, text_col=text_col, lm_model=lm_model,
+                         lm_threshold=lm_threshold, **flag_kw)
+
+
+def curation_tail(df: DataFrame, *, text_col: str = "text",
+                  lm_model: dict | None = None,
+                  lm_threshold: float | None = None,
+                  **flag_kw) -> DataFrame:
+    """The stateless curation both streaming drivers run on their dedup
+    survivors (:func:`streaming_curate` in the stream,
+    ``near_dedup.near_curate_finish`` in the sink's batch domain):
+    extraction + quality + verdict, then — with ``lm_model`` +
+    ``lm_threshold`` — the frozen bigram LM score
+    (``curation.with_lm_perplexity``, pure map-side), then
+    ``curation.with_stateless_flags``, whose one keep rule folds every
+    flag present (``is_near_dup``, ``high_perplexity``). ``flag_kw``
+    forwards thresholds (min_tokens / max_tokens / min_confidence /
+    min_stopword_ratio)."""
+    from documentai_spark.operators.curation import (
+        with_lm_perplexity, with_stateless_flags,
+    )
+
+    out = with_verdict(with_extraction_and_quality(df, text_col=text_col))
     if lm_model is not None and lm_threshold is not None:
-        extracted = with_lm_perplexity(extracted, lm_model,
-                                       text_col=text_col,
-                                       threshold=lm_threshold)
-    return with_stateless_flags(extracted, text_col=text_col, **flag_kw)
+        out = with_lm_perplexity(out, lm_model, text_col=text_col,
+                                 threshold=lm_threshold)
+    return with_stateless_flags(out, text_col=text_col, **flag_kw)
 
 
 def start_to_parquet(stream_df: DataFrame, out_path: str,

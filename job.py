@@ -59,19 +59,24 @@ def check_driver_heap(heap_bytes: int,
             "apply after JVM start)", ResourceWarning, stacklevel=2)
 
 
-# re-exports: auto_shards lives with the sizing rule it enforces,
-# zero_nulls with the stage runner that consumes it (both moved r7 when
-# the --prepare body became the resumable plans.checkpoint stage runner)
-from documentai_spark.operators.packing import auto_shards  # noqa: E402,F401
-from documentai_spark.plans.checkpoint import zero_nulls  # noqa: E402,F401
-
-
 _DEMO_CLASSIFY_CONFIG = {
     "billing": {"keywords": ["invoice", "amount", "total"],
                 "max_pages": 3},
     "shipping": {"keywords": ["vessel", "port", "freight", "shipment"]},
     "credit": {"keywords": ["credit", "beneficiary"]},
 }
+
+
+def _accounting(metrics) -> dict:
+    """The drop report --curate and --stream-curate print, from the
+    ``curation.drop_accounting`` metrics."""
+    from documentai_spark.operators.curation import by_reason
+    from documentai_spark.plans.checkpoint import zero_nulls
+
+    acc = zero_nulls(metrics)
+    return {"rows": acc["rows"], "kept": acc["kept"],
+            "dropped": acc["rows"] - acc["kept"],
+            "by_reason": by_reason(acc)}
 
 
 def main() -> None:
@@ -306,8 +311,7 @@ def main() -> None:
         return
 
     if args.stream_curate:
-        from pyspark.sql import functions as F
-
+        from documentai_spark.operators.curation import drop_accounting
         from documentai_spark.streaming.pipeline import (
             start_to_parquet, streaming_curate,
         )
@@ -378,25 +382,10 @@ def main() -> None:
                                  args.output, ckpt)
         q.awaitTermination()
         out = spark.read.parquet(args.output)
-        aggs = [F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("keep").cast("int")).alias("kept")]
-        if args.near_dedup:
-            aggs.append(F.sum(F.col("is_near_dup").cast("int"))
-                        .alias("near_dup"))
-        if args.lm_threshold is not None:
-            aggs.append(F.sum(F.col("high_perplexity").cast("int"))
-                        .alias("high_perplexity"))
-        acc = out.agg(*aggs).first()
-        wall = time.time() - t0
-        line = {"rows": acc["rows"], "kept": acc["kept"],
-                "sec": round(wall, 2),
-                "checkpoint": ckpt,
-                "output": args.output}
-        if args.near_dedup:
-            line["near_dup"] = acc["near_dup"]
-        if args.lm_threshold is not None:
-            line["high_perplexity"] = acc["high_perplexity"]
-        print(json.dumps(line))
+        acc = out.agg(*drop_accounting(out.columns)).first().asDict()
+        print(json.dumps({**_accounting(acc),
+                          "sec": round(time.time() - t0, 2),
+                          "checkpoint": ckpt, "output": args.output}))
         spark.stop()
         return
 
@@ -416,9 +405,6 @@ def main() -> None:
                 "output": args.output}
         if args.near_dedup:
             line["near_dup"] = stats["near_dup"]
-        if stats.get("incomplete"):
-            line["incomplete"] = True
-            line["buckets_pending"] = stats["buckets_pending"]
         print(json.dumps(line))
         spark.stop()
         return
@@ -473,39 +459,27 @@ def main() -> None:
         return
 
     if args.curate:
-        from pyspark.sql import functions as F
-
         from pyspark.sql.observation import Observation
 
-        from documentai_spark.operators.curation import curate_documents
-        from documentai_spark.plans.checkpoint import drop_accounting
+        from documentai_spark.operators.curation import (
+            curate_documents, drop_accounting, load_lm_model,
+            with_lm_perplexity,
+        )
         t0 = time.time()
-        out = curate_documents(spark.read.parquet(args.input),
-                               near_dedup=args.near_dedup)
+        docs = spark.read.parquet(args.input)
         if args.lm_threshold is not None:
-            from documentai_spark.operators.curation import (
-                load_lm_model, with_lm_perplexity,
-            )
-            model = load_lm_model()
-            out = with_lm_perplexity(out, model,
-                                     threshold=args.lm_threshold)
-            out = out.withColumn(
-                "keep", F.col("keep") & ~F.col("high_perplexity"))
+            docs = with_lm_perplexity(docs, load_lm_model(),
+                                      threshold=args.lm_threshold)
+        out = curate_documents(docs, near_dedup=args.near_dedup)
         # drop accounting rides the write job itself (Observation) —
         # no output re-read, and `keep` stays boolean here (the hive
         # partition directory stringifies it on disk)
         obs = Observation("curation")
-        reasons, metrics = drop_accounting(
-            near_dedup=args.near_dedup, lm=args.lm_threshold is not None)
-        out = out.observe(obs, *metrics)
+        out = out.observe(obs, *drop_accounting(out.columns))
         (out.write.mode("overwrite").partitionBy("keep")
             .parquet(args.output))
-        acc = zero_nulls(obs.get)
-        wall = time.time() - t0
-        print(json.dumps({"rows": acc["rows"], "kept": acc["kept"],
-                          "dropped": acc["rows"] - acc["kept"],
-                          "by_reason": {k: acc[k] for k in reasons},
-                          "sec": round(wall, 2),
+        print(json.dumps({**_accounting(obs.get),
+                          "sec": round(time.time() - t0, 2),
                           "output": args.output}))
         spark.stop()
         return

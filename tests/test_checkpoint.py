@@ -15,6 +15,25 @@ def _collect_sorted(spark, path):
     return sorted(df.collect(), key=lambda r: (r.conv_id, r.turn_idx))
 
 
+def _crash_curate_on(monkeypatch, n: int) -> None:
+    """Make ``operators.curation.curate_documents`` raise on its call
+    number ``n``: the checkpointed curation loop calls it once per
+    pending bucket, in bucket order, so buckets before the ``n``-th
+    commit and the run dies there."""
+    import documentai_spark.operators.curation as cur_mod
+
+    real = cur_mod.curate_documents
+    calls = []
+
+    def curate(*a, **k):
+        calls.append(1)
+        if len(calls) >= n:
+            raise RuntimeError("killed")
+        return real(*a, **k)
+
+    monkeypatch.setattr(cur_mod, "curate_documents", curate)
+
+
 def test_kill_and_resume_idempotent(spark, transcripts_path, tmp_path):
     out_partial = str(tmp_path / "out_resume")
     out_oneshot = str(tmp_path / "out_oneshot")
@@ -123,7 +142,8 @@ def test_read_transcripts_formats_agree(spark, tmp_path):
         read_transcripts(spark, pdir, fmt="avro")
 
 
-def test_curation_checkpoint_resume_and_global_dedup(spark, tmp_path):
+def test_curation_checkpoint_resume_and_global_dedup(spark, tmp_path,
+                                                     monkeypatch):
     """Checkpointed curation: fingerprint-hash bucketing keeps the
     per-bucket dedup globally exact (flags equal the single-job
     operator's), and a killed run resumes by skipping done buckets."""
@@ -137,10 +157,13 @@ def test_curation_checkpoint_resume_and_global_dedup(spark, tmp_path):
     docs.write.parquet(in_dir)
     out_dir = str(tmp_path / "cur_out")
 
-    # partial run (kill analog), then resume
-    s1 = run_checkpointed_curation(spark, in_dir, out_dir, n_buckets=4,
-                                   max_buckets=2, log=lambda *_: None)
-    assert s1["buckets_done"] == 2
+    # a run that crashes in the 3rd bucket job, then resume
+    _crash_curate_on(monkeypatch, 3)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_checkpointed_curation(spark, in_dir, out_dir, n_buckets=4,
+                                  log=lambda *_: None)
+    monkeypatch.undo()
+    assert len(read_manifest(out_dir)) == 2
     s2 = run_checkpointed_curation(spark, in_dir, out_dir, n_buckets=4,
                                    log=lambda *_: None)
     assert s2["buckets_skipped"] == 2 and s2["buckets_done"] == 2
@@ -160,7 +183,8 @@ def test_curation_checkpoint_resume_and_global_dedup(spark, tmp_path):
 
 
 def test_near_dedup_checkpoint_resume_byte_equals_single_run(spark,
-                                                             tmp_path):
+                                                             tmp_path,
+                                                             monkeypatch):
     """VERDICT r6 #2: resumable near-dedup. Phase 0 commits the GLOBAL
     pairs+closure reps table under its own stage manifest; the
     per-bucket loop joins it. A killed run resumes (reps stage and done
@@ -196,11 +220,15 @@ def test_near_dedup_checkpoint_resume_byte_equals_single_run(spark,
     kw = dict(jaccard_threshold=0.7, min_tokens=5, min_confidence=0.0,
               min_stopword_ratio=0.0)
 
-    # partial run (kill analog): reps stage + 2 of 4 buckets commit
-    s1 = run_checkpointed_curation(spark, in_dir, out_dir, n_buckets=4,
-                                   near_dedup=True, max_buckets=2,
-                                   log=lambda *_: None, **kw)
-    assert s1["buckets_done"] == 2
+    # a run that crashes in the 3rd bucket job: reps stage + 2 of 4
+    # buckets commit
+    _crash_curate_on(monkeypatch, 3)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_checkpointed_curation(spark, in_dir, out_dir, n_buckets=4,
+                                  near_dedup=True,
+                                  log=lambda *_: None, **kw)
+    monkeypatch.undo()
+    assert len(read_manifest(out_dir)) == 2
     rep_m = read_stage_manifest(out_dir, "near-reps")
     assert rep_m and rep_m["status"] == "done"
     # one label per DISTINCT content (r7: only exact-dup representatives
@@ -736,7 +764,8 @@ def test_prepare_manifest_without_lm_threshold_resumes(spark, tmp_path,
     assert "incomplete" not in r and r["packed_docs"] > 0
 
 
-def test_resume_accepts_explicitly_spelled_defaults(spark, tmp_path):
+def test_resume_accepts_explicitly_spelled_defaults(spark, tmp_path,
+                                                    monkeypatch):
     """'Same configuration' must compare semantics, not spelling: run 1
     passes a threshold explicitly at its default value, run 2 omits it —
     the resume is semantically identical and must be accepted
@@ -747,9 +776,11 @@ def test_resume_accepts_explicitly_spelled_defaults(spark, tmp_path):
     in_dir = str(tmp_path / "docs_in_cfg")
     docs.write.parquet(in_dir)
     out = str(tmp_path / "out_cfg_norm")
-    run_checkpointed_curation(spark, in_dir, out, n_buckets=4,
-                              max_buckets=2, min_tokens=20,
-                              log=lambda *a: None)
+    _crash_curate_on(monkeypatch, 3)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_checkpointed_curation(spark, in_dir, out, n_buckets=4,
+                                  min_tokens=20, log=lambda *a: None)
+    monkeypatch.undo()
     s = run_checkpointed_curation(spark, in_dir, out, n_buckets=4,
                                   log=lambda *a: None)
     assert s["buckets_skipped"] == 2 and s["buckets_done"] == 2

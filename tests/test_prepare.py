@@ -156,12 +156,12 @@ def test_pack_corpus_is_the_job_stage_boundary(spark, docs, tmp_path):
 
 def test_job_accounting_survives_zero_rows(spark, tmp_path):
     """r6 review: SUM Observation metrics over a write that observes
-    zero rows come back as SQL NULL (None); job.zero_nulls coalesces
+    zero rows come back as SQL NULL (None); zero_nulls coalesces
     them so the end-of-job report arithmetic (rows - surviving) cannot
     TypeError after the writes already succeeded."""
     from pyspark.sql.observation import Observation
 
-    import job
+    from documentai_spark.plans.checkpoint import zero_nulls
 
     empty = spark.createDataFrame([], "doc_id long, keep boolean")
     obs = Observation("acc_zero_rows")
@@ -171,7 +171,7 @@ def test_job_accounting_survives_zero_rows(spark, tmp_path):
     out.write.mode("overwrite").parquet(str(tmp_path / "o"))
     raw = obs.get
     assert raw["rows"] == 0 and raw["kept"] is None   # the hazard
-    acc = job.zero_nulls(raw)
+    acc = zero_nulls(raw)
     assert acc["rows"] - acc["kept"] == 0
 
 
@@ -222,7 +222,7 @@ def test_auto_shards_sizing():
     ResourceWarning; the requested value stays a floor."""
     import warnings
 
-    from job import auto_shards
+    from documentai_spark.operators.packing import auto_shards
 
     assert auto_shards(16, 500) == 16
     assert auto_shards(16, 100_000_000) == 20

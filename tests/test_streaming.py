@@ -620,3 +620,46 @@ def test_streaming_curate_lm_threshold_matches_batch(spark, tmp_path):
     want = {r.doc_id: tuple(r[c] for c in cols)
             for r in batch.select("doc_id", *cols).collect()}
     assert got == want
+
+
+def test_curate_and_stream_curate_print_one_accounting(spark, tmp_path,
+                                                       monkeypatch,
+                                                       capsys):
+    """job.py --curate and --stream-curate report their drops from the
+    one curation.drop_accounting: on a duplicate-free documents dir
+    with --lm-threshold both print the same kept count and by_reason,
+    and by_reason["high_perplexity"] counts the flagged rows of each
+    output."""
+    import json
+    import os
+    import sys
+
+    import job
+    from __spark_entry__ import SF0001
+    from documentai_spark.operators.dedup import exact_dedup
+
+    docs = spark.read.parquet(os.path.join(SF0001, "documents.parquet"))
+    in_dir = str(tmp_path / "docs")
+    exact_dedup(docs).write.parquet(in_dir)
+    # run main() on the test session; it stops its session at the end
+    monkeypatch.setattr(job, "build_session", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+
+    def run(mode: str) -> dict:
+        out = str(tmp_path / mode.strip("-"))
+        monkeypatch.setattr(sys, "argv", [
+            "job.py", "--input", in_dir, "--output", out, mode,
+            "--lm-threshold", "1.45"])
+        job.main()
+        line = json.loads(capsys.readouterr().out.strip()
+                          .splitlines()[-1])
+        flagged = spark.read.parquet(out).filter("high_perplexity")
+        assert line["by_reason"]["high_perplexity"] == flagged.count()
+        return line
+
+    batch = run("--curate")
+    stream = run("--stream-curate")
+    assert batch["by_reason"]["high_perplexity"] > 0
+    assert stream["rows"] == batch["rows"]
+    assert stream["kept"] == batch["kept"]
+    assert stream["by_reason"] == batch["by_reason"]

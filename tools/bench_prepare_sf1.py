@@ -85,10 +85,10 @@ def run_prepare(spark, in_path: str, out_path: str) -> dict:
     closure round count and per-stage shuffle metrics are observable."""
     from pyspark.sql.observation import Observation
 
+    from documentai_spark.operators.packing import auto_shards
     from documentai_spark.plans.prepare import (
         pack_corpus, prepare_training_data,
     )
-    from job import auto_shards
 
     shutil.rmtree(out_path, ignore_errors=True)
     before = _stage_shuffle(spark)
